@@ -38,10 +38,14 @@ class GraftEngine(
 
   /** Mutable handle on the metadata catalog (the FUSE-semantics plane).
     * Ops are snapshot-in/snapshot-out; this handle just tracks the
-    * latest snapshot the way the reference's worker owns its inode maps. */
+    * latest snapshot the way the reference's worker owns its inode maps.
+    * Mutations are serialized (the reference's RwLock write side), so two
+    * concurrent `updateFs` calls never lose one's update and each caller
+    * gets back the snapshot its own `f` produced; readers see the latest
+    * published snapshot without taking the lock. */
   @volatile private var catalog: InodeCatalog = InodeCatalog.empty(spark)
   def fs: InodeCatalog = catalog
-  def updateFs(f: InodeCatalog => InodeCatalog): InodeCatalog = {
+  def updateFs(f: InodeCatalog => InodeCatalog): InodeCatalog = synchronized {
     catalog = f(catalog)
     // the mutation is opaque here, so drop every cached listing — the
     // reference patches its ls_cache in place on create because the FUSE

@@ -31,41 +31,66 @@ import org.apache.spark.sql.types._
   * ino numbers are never reused (no free-list; allocation is max+1 and
   * `generation` bumps on path reuse), and the snapshot is immutable
   * between ops.
+  *
+  * One probe per op: the reference answers each metadata call with one
+  * in-memory inode-map probe (inode.rs:83-110, filesystem.rs:1086-1291),
+  * and every Spark job here costs a planned query, so a call runs ONE
+  * filtered `collect()` ([[probe]]) of the live rows any of its checks
+  * needs and sorts them into roles (entry, parent, source, destination)
+  * on the driver. Minting adds one aggregate ([[allocate]]: the next
+  * ino and the path's next generation together); rmdir adds a second
+  * probe for the children of the ino its first probe found. Checks read
+  * the probed rows in the order the errors are reported, so fusing the
+  * probes changes no error text and no error order.
   */
 final case class InodeCatalog(df: DataFrame) {
   import InodeCatalog._
 
   private def spark: SparkSession = df.sparkSession
 
+  /** The single Spark job behind a metadata op: every live row matching
+    * any of `preds`, in scan order. */
+  private def probe(preds: Column*): Array[Row] =
+    df.filter(col("nlink") > 0 && preds.reduce(_ || _)).collect()
+
   /** P2: point lookup by ino. */
-  def getattr(ino: Long): Option[Row] =
-    df.filter(col("ino") === ino && col("nlink") > 0).collect().headOption
+  def getattr(ino: Long): Option[Row] = probe(col("ino") === ino).headOption
 
   /** J1: lookup by (parent ino, name). */
   def lookup(parent: Long, name: String): Option[Row] =
-    df.filter(col("parent") === parent && col("name") === name && col("nlink") > 0)
-      .collect()
-      .headOption
+    probe(isEntry(parent, name)).headOption
 
   /** Path-index probe (the `path_index: HashMap<String, ino>` direction). */
   def resolve(path: String): Option[Row] =
-    df.filter(col("full_path") === path && col("nlink") > 0).collect().headOption
+    probe(col("full_path") === path).headOption
 
   /** O1+O2: name-sorted directory listing with offset pagination
-    * (skip/limit resume, uring_fs/mod.rs:126-152). */
+    * (skip/limit resume, uring_fs/mod.rs:126-152). One directory is
+    * small, so its rows sort in a single partition: no shuffle for the
+    * window, no range shuffle for the final order. */
   def readdir(parent: Long, offset: Int = 0, limit: Int = Int.MaxValue): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("parent"))
       .orderBy(col("name"))
     df.filter(col("parent") === parent && col("nlink") > 0)
+      .coalesce(1)
       .withColumn("off", row_number().over(w))
       .filter(col("off") > offset && col("off") <= offset + limit)
       .select(col("off"), col("ino"), col("name"), col("kind"))
       .orderBy(col("off"))
   }
 
-  private def nextIno: Long =
-    df.agg(max(col("ino"))).head().getLong(0) + 1
+  /** The one aggregate a mint needs: the next free ino and the
+    * generation `path` takes (one past the highest it ever carried,
+    * tombstones included; 0 for a fresh path). It runs in one partition,
+    * so it needs no shuffle and stays one job. */
+  private def allocate(path: String): (Long, Long) = {
+    val r = df.coalesce(1).agg(
+      max(col("ino")) + 1,
+      coalesce(max(when(col("full_path") === path, col("generation"))) + 1,
+        lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Apply column updates to every live entry of `ino` (attrs are inode
     * properties mirrored across its hardlink rows, like nlink). */
@@ -76,27 +101,34 @@ final case class InodeCatalog(df: DataFrame) {
         when(col("ino") === ino && col("nlink") > 0, v).otherwise(col(f)))
     }
 
-  /** Mint a new inode row under `parent` (shared by create / symlink /
-    * mknod): generation bump on path reuse, times = `now`, 0 handles. */
-  private def mint(parent: Long, name: String, kind: String, size: Long,
+  /** `d` plus one new row. */
+  private def append(d: DataFrame, row: Row): DataFrame =
+    d.unionByName(spark.createDataFrame(java.util.List.of(row), schema))
+
+  /** Mint a new inode row under the probed directory row `parent` (shared
+    * by create / symlink / mknod): generation bump on path reuse,
+    * times = `now`, 0 handles. */
+  private def mint(parent: Row, name: String, kind: String, size: Long,
       mode: Int, uid: Int, gid: Int, target: String,
+      now: Long): DataFrame = {
+    val path = childPath(parent, name)
+    val (ino, gen) = allocate(path)
+    append(df, Row(ino, parent.getAs[Long]("ino"), name, path, kind, size,
+      mode, uid, gid, gen, 1L, Map.empty[String, Array[Byte]], target, now,
+      now, now, 0L))
+  }
+
+  /** create / symlink: P9 name guard, EEXIST, then the parent — all off
+    * one probe. */
+  private def mintChecked(parent: Long, name: String, kind: String,
+      size: Long, mode: Int, uid: Int, gid: Int, target: String,
       now: Long): InodeCatalog = {
-    val parentPath = getattr(parent)
-      .map(_.getAs[String]("full_path"))
+    require(name.length <= MaxNameLength, s"name too long: $name") // P9
+    val rows = probe(isEntry(parent, name), col("ino") === parent)
+    require(entryIn(rows, parent, name).isEmpty, s"exists: $name") // EEXIST
+    val p = inoIn(rows, parent)
       .getOrElse(sys.error(s"no such parent ino $parent"))
-    val fullPath =
-      if (parentPath == "/") s"/$name" else s"$parentPath/$name"
-    val gen = df
-      .filter(col("full_path") === fullPath)
-      .agg(coalesce(max(col("generation")) + 1, lit(0L)))
-      .head()
-      .getLong(0)
-    val row = spark.createDataFrame(
-      java.util.List.of(
-        Row(nextIno, parent, name, fullPath, kind, size, mode, uid, gid, gen,
-          1L, Map.empty[String, Array[Byte]], target, now, now, now, 0L)),
-      schema)
-    InodeCatalog(df.unionByName(row))
+    InodeCatalog(mint(p, name, kind, size, mode, uid, gid, target, now))
   }
 
   /** Create a child node (file or dir). Recreating a previously seen path
@@ -110,11 +142,8 @@ final case class InodeCatalog(df: DataFrame) {
       mode: Int = 0x1a4, // 0644
       uid: Int = 0,
       gid: Int = 0,
-      now: Long = 0L): InodeCatalog = {
-    require(name.length <= MaxNameLength, s"name too long: $name") // P9
-    require(lookup(parent, name).isEmpty, s"exists: $name")
-    mint(parent, name, kind, 0L, mode, uid, gid, null, now)
-  }
+      now: Long = 0L): InodeCatalog =
+    mintChecked(parent, name, kind, 0L, mode, uid, gid, null, now)
 
   def mkdir(parent: Long, name: String, mode: Int = 0x1ed): InodeCatalog =
     create(parent, name, "dir", mode) // 0755
@@ -125,12 +154,9 @@ final case class InodeCatalog(df: DataFrame) {
     * dangling links are legal, exactly as in the reference (readlink
     * just returns the stored bytes). */
   def symlink(parent: Long, name: String, target: String,
-      now: Long = 0L): InodeCatalog = {
-    require(name.length <= MaxNameLength, s"name too long: $name") // P9
-    require(lookup(parent, name).isEmpty, s"exists: $name") // EEXIST
-    mint(parent, name, "symlink", target.length.toLong, 0x1ff, 0, 0,
+      now: Long = 0L): InodeCatalog =
+    mintChecked(parent, name, "symlink", target.length.toLong, 0x1ff, 0, 0,
       target, now)
-  }
 
   /** mknod (filesystem.rs:740-854 + passthrough/passthrough_fs.rs:517-545):
     * mint an inode of any supported file kind. SimpleFS itself accepts
@@ -161,8 +187,9 @@ final case class InodeCatalog(df: DataFrame) {
       case other => return Left(f"ENOSYS: unknown file type 0x$other%04x")
     }
     if (name.length > MaxNameLength) return Left(s"ENAMETOOLONG: $name")
-    if (lookup(parent, name).isDefined) return Left(s"EEXIST: $name")
-    val p = getattr(parent) match {
+    val rows = probe(isEntry(parent, name), col("ino") === parent)
+    if (entryIn(rows, parent, name).isDefined) return Left(s"EEXIST: $name")
+    val p = inoIn(rows, parent) match {
       case Some(r) => r
       case None => return Left(s"ENOENT: parent ino $parent")
     }
@@ -174,8 +201,8 @@ final case class InodeCatalog(df: DataFrame) {
     val g =
       if ((p.getAs[Int]("mode") & 0x400) != 0) p.getAs[Int]("gid")
       else reqGid // creation_gid
-    val minted = mint(parent, name, kind, 0L, perm, reqUid, g, null, now)
-    Right(InodeCatalog(updateIno(minted.df, parent)(
+    val minted = mint(p, name, kind, 0L, perm, reqUid, g, null, now)
+    Right(InodeCatalog(updateIno(minted, parent)(
       "mtime_us" -> lit(now), "ctime_us" -> lit(now))))
   }
 
@@ -195,35 +222,30 @@ final case class InodeCatalog(df: DataFrame) {
   def link(ino: Long, newParent: Long, newName: String,
       now: Long = 0L): InodeCatalog = {
     require(newName.length <= MaxNameLength, s"name too long: $newName") // P9
-    require(lookup(newParent, newName).isEmpty, s"exists: $newName") // EEXIST
-    val src = getattr(ino).getOrElse(sys.error(s"no such ino $ino"))
+    val rows = probe(isEntry(newParent, newName), col("ino") === ino,
+      col("ino") === newParent)
+    require(entryIn(rows, newParent, newName).isEmpty,
+      s"exists: $newName") // EEXIST
+    val src = inoIn(rows, ino).getOrElse(sys.error(s"no such ino $ino"))
     require(src.getAs[String]("kind") != "dir", "EPERM: hardlink to directory")
-    val parentPath = getattr(newParent)
-      .map(_.getAs[String]("full_path"))
-      .getOrElse(sys.error(s"no such parent ino $newParent"))
-    val fullPath =
-      if (parentPath == "/") s"/$newName" else s"$parentPath/$newName"
-    val gen = df
-      .filter(col("full_path") === fullPath)
-      .agg(coalesce(max(col("generation")) + 1, lit(0L)))
-      .head()
-      .getLong(0)
+    val path = childPath(
+      inoIn(rows, newParent)
+        .getOrElse(sys.error(s"no such parent ino $newParent")),
+      newName)
+    val (_, gen) = allocate(path)
     val newCount = src.getAs[Long]("nlink") + 1
-    val row = spark.createDataFrame(
-      java.util.List.of(
-        Row(ino, newParent, newName, fullPath, src.getAs[String]("kind"),
-          src.getAs[Long]("size"), src.getAs[Int]("mode"),
-          src.getAs[Int]("uid"), src.getAs[Int]("gid"), gen, newCount,
-          src.getAs[Map[String, Array[Byte]]]("xattrs"),
-          src.getAs[String]("symlink_target"),
-          src.getAs[Long]("atime_us"), src.getAs[Long]("mtime_us"),
-          now, src.getAs[Long]("open_handles"))),
-      schema)
     // nlink bump mirrors across the ino's rows; ctime too
     // (link updates last_metadata_changed, filesystem.rs:1316)
     val bumped = updateIno(df, ino)(
       "nlink" -> (col("nlink") + 1), "ctime_us" -> lit(now))
-    InodeCatalog(bumped.unionByName(row))
+    InodeCatalog(append(bumped,
+      Row(ino, newParent, newName, path, src.getAs[String]("kind"),
+        src.getAs[Long]("size"), src.getAs[Int]("mode"),
+        src.getAs[Int]("uid"), src.getAs[Int]("gid"), gen, newCount,
+        src.getAs[Map[String, Array[Byte]]]("xattrs"),
+        src.getAs[String]("symlink_target"),
+        src.getAs[Long]("atime_us"), src.getAs[Long]("mtime_us"),
+        now, src.getAs[Long]("open_handles"))))
   }
 
   /** J3: two-sided rename — the node moves to (newParent, newName) and
@@ -237,19 +259,20 @@ final case class InodeCatalog(df: DataFrame) {
       oldName: String,
       newParent: Long,
       newName: String): InodeCatalog = {
-    val node = lookup(oldParent, oldName)
+    val rows = probe(isEntry(oldParent, oldName), col("ino") === newParent,
+      isEntry(newParent, newName))
+    val node = entryIn(rows, oldParent, oldName)
       .getOrElse(sys.error(s"no such entry $oldName"))
     val oldPath = node.getAs[String]("full_path")
-    val newParentPath = getattr(newParent)
-      .map(_.getAs[String]("full_path"))
-      .getOrElse(sys.error(s"no such parent ino $newParent"))
-    val newPath =
-      if (newParentPath == "/") s"/$newName" else s"$newParentPath/$newName"
+    val newPath = childPath(
+      inoIn(rows, newParent)
+        .getOrElse(sys.error(s"no such parent ino $newParent")),
+      newName)
     val live = col("nlink") > 0
     // replace an existing destination entry (rename-over semantics):
     // a directory target zeroes outright, a file target decrements its
     // link count — filesystem.rs:1253-1257 (hardlinks = 0 vs -= 1)
-    val cleared = lookup(newParent, newName) match {
+    val cleared = entryIn(rows, newParent, newName) match {
       case Some(dest) if dest.getAs[Long]("ino") != node.getAs[Long]("ino") =>
         if (dest.getAs[String]("kind") == "dir")
           df.withColumn(
@@ -257,8 +280,7 @@ final case class InodeCatalog(df: DataFrame) {
             when(col("full_path") === newPath && live, lit(0L))
               .otherwise(col("nlink")))
         else
-          dropEntry(df, dest.getAs[Long]("ino"),
-            col("full_path") === newPath)
+          dropEntry(df, dest, col("full_path") === newPath)
       case _ => df
     }
     val moved = cleared
@@ -285,15 +307,13 @@ final case class InodeCatalog(df: DataFrame) {
     * removed entry becomes a tombstone immediately (the NAME is gone from
     * its directory; the inode lives on through its siblings, which mirror
     * the decremented count); the LAST link drops to 0 and survives until
-    * [[forget]], the unlink→forget two-step of inode_table.rs:159-186. */
-  private def dropEntry(d: DataFrame, ino: Long,
+    * [[forget]], the unlink→forget two-step of inode_table.rs:159-186.
+    * The link count comes from the probed `node` row: nlink is mirrored
+    * on every live row of an inode. */
+  private def dropEntry(d: DataFrame, node: Row,
       isEntry: Column): DataFrame = {
-    val links = d
-      .filter(col("ino") === ino && col("nlink") > 0)
-      .agg(max(col("nlink")))
-      .head()
-      .getLong(0)
-    if (links > 1)
+    val ino = node.getAs[Long]("ino")
+    if (node.getAs[Long]("nlink") > 1)
       d.withColumn(
         "nlink",
         when(col("ino") === ino && isEntry && col("nlink") > 0, lit(-1L))
@@ -311,10 +331,7 @@ final case class InodeCatalog(df: DataFrame) {
     * inode_table.rs:159-186 (unlink keeps ino until forget). */
   def unlink(parent: Long, name: String): InodeCatalog =
     lookup(parent, name) match {
-      case Some(node) =>
-        InodeCatalog(
-          dropEntry(df, node.getAs[Long]("ino"),
-            col("parent") === parent && col("name") === name))
+      case Some(node) => InodeCatalog(dropEntry(df, node, isEntry(parent, name)))
       case None => this
     }
 
@@ -328,18 +345,18 @@ final case class InodeCatalog(df: DataFrame) {
     * survives until [[forget]]); the parent's mtime/ctime bump. */
   def rmdir(parent: Long, name: String, reqUid: Int = 0, reqGid: Int = 0,
       now: Long = 0L): Either[String, InodeCatalog] = {
-    val node = lookup(parent, name) match {
+    val rows = probe(isEntry(parent, name), col("ino") === parent)
+    val node = entryIn(rows, parent, name) match {
       case Some(r) => r
       case None => return Left(s"ENOENT: $name")
     }
     if (node.getAs[String]("kind") != "dir")
       return Left(s"ENOTDIR: $name is a ${node.getAs[String]("kind")}")
     val ino = node.getAs[Long]("ino")
-    val children =
-      df.filter(col("parent") === ino && col("nlink") > 0).count()
+    val children = probe(col("parent") === ino).length
     if (children > 0)
       return Left(s"ENOTEMPTY: $name has $children entries")
-    val p = getattr(parent) match {
+    val p = inoIn(rows, parent) match {
       case Some(r) => r
       case None => return Left(s"ENOENT: parent ino $parent")
     }
@@ -349,8 +366,7 @@ final case class InodeCatalog(df: DataFrame) {
     if ((p.getAs[Int]("mode") & 0x200) != 0 && reqUid != 0 &&
         reqUid != p.getAs[Int]("uid") && reqUid != node.getAs[Int]("uid"))
       return Left(s"EACCES: sticky parent, uid $reqUid may not remove")
-    val dropped =
-      dropEntry(df, ino, col("parent") === parent && col("name") === name)
+    val dropped = dropEntry(df, node, isEntry(parent, name))
     Right(InodeCatalog(updateIno(dropped, parent)(
       "mtime_us" -> lit(now), "ctime_us" -> lit(now))))
   }
@@ -690,11 +706,13 @@ final case class InodeCatalog(df: DataFrame) {
     df.localCheckpoint(true).write.mode("overwrite").parquet(dir)
 
   /** Force computation of the snapshot (long op chains otherwise build
-    * ever-deeper plans — the batch analog of flushing the write log). */
-  def checkpointed(): InodeCatalog = {
-    val mat = df.localCheckpoint(true)
-    InodeCatalog(mat)
-  }
+    * ever-deeper plans — the batch analog of flushing the write log).
+    * Every minted row arrives in a one-row partition of its own; the
+    * coalesce keeps those from piling up across checkpoints, where each
+    * would add a task to every later probe. */
+  def checkpointed(): InodeCatalog =
+    InodeCatalog(
+      df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(true))
 }
 
 object InodeCatalog {
@@ -752,6 +770,19 @@ object InodeCatalog {
     // open_file_handles refcount (filesystem.rs:202), mirrored across an
     // ino's entries like nlink
     StructField("open_handles", LongType, nullable = false)))
+
+  // Probe predicates and the driver-side roles a probe's rows sort into.
+  private def isEntry(parent: Long, name: String): Column =
+    col("parent") === parent && col("name") === name
+  private def entryIn(rows: Array[Row], parent: Long, name: String): Option[Row] =
+    rows.find(r =>
+      r.getAs[Long]("parent") == parent && r.getAs[String]("name") == name)
+  private def inoIn(rows: Array[Row], ino: Long): Option[Row] =
+    rows.find(_.getAs[Long]("ino") == ino)
+  private def childPath(parent: Row, name: String): String = {
+    val p = parent.getAs[String]("full_path")
+    if (p == "/") s"/$name" else s"$p/$name"
+  }
 
   /** Reload a persisted catalog (schema-checked: names AND types, so a
     * wrong-typed parquet fails here rather than deep inside a later

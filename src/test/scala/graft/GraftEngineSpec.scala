@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.GraftEngine
+import graft.meta.InodeCatalog
 import java.nio.file.Files
 
 class GraftEngineSpec extends SparkSpec {
@@ -66,7 +67,6 @@ class GraftEngineSpec extends SparkSpec {
   }
 
   test("copy_file_range: saturating read, hole fill, A7 size accounting (filesystem.rs:1812)") {
-    import graft.meta.InodeCatalog
     val rFh = InodeCatalog.fhEncode(1L, read = true, write = false)
     val wFh = InodeCatalog.fhEncode(2L, read = false, write = true)
     engine.kv.put(Seq(
@@ -111,5 +111,33 @@ class GraftEngineSpec extends SparkSpec {
     intercept[NoSuchElementException] {
       engine.copyFileRange("cfr_src", rFh, 0, "missing", wFh, dstIno, 0, 1)
     }
+  }
+
+  test("fs plane: concurrent updateFs calls lose no mutation") {
+    val eng = new GraftEngine(spark,
+      Files.createTempDirectory("engine-conc").toString, 64)
+    val threads = 4
+    val perThread = 3
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val calls = for (t <- 0 until threads) yield pool.submit(
+        new java.util.concurrent.Callable[Seq[(String, InodeCatalog)]] {
+          def call(): Seq[(String, InodeCatalog)] = {
+            start.await()
+            (0 until perThread).map { i =>
+              val name = s"t$t-$i"
+              name -> eng.updateFs(_.create(1, name, "file"))
+            }
+          }
+        })
+      start.countDown()
+      for ((name, snapshot) <- calls.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS)))
+        assert(snapshot.lookup(1, name).isDefined,
+          s"the snapshot updateFs returned for $name lacks it")
+    } finally pool.shutdown()
+    val listed = eng.fs.readdir(1).collect().map(_.getAs[String]("name")).toSet
+    val want = (for (t <- 0 until threads; i <- 0 until perThread) yield s"t$t-$i").toSet
+    assert(listed === want, "every concurrent create must survive")
   }
 }
