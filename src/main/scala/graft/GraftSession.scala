@@ -49,11 +49,11 @@ object GraftSession {
     math.min(math.max(requested, 128L), 1L << 26)
   }
 
-  /** The one shared builder behind every graft entry point (GraftSession,
-    * Verify, Bench, BenchOne, Probe, ScaleProbe, tools) — r11 ADVICE:
-    * the threshold/config block was duplicated six times and drifted
-    * (tools/PhashCands had been skipped). Entry points layer only their
-    * master/app specifics on top. */
+  /** The one shared builder behind every graft entry point
+    * (GraftSession.get, Verify, Bench, tools.PlanDump, perfbench) and the
+    * spec suite's session — r11 ADVICE: the threshold/config block had
+    * been duplicated per entry point and drifted. Callers layer only
+    * their master/app specifics on top. */
   def tunedBuilder(cores: Int, appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -84,14 +84,6 @@ object GraftSession {
   def get(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = tunedBuilder(cores, appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply graft configs to an externally built session (Verify/Bench use
-    * their own builder per the driver contract). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 }

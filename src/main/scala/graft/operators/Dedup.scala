@@ -378,10 +378,10 @@ object Dedup {
     // label(v) — the fixpoint is exactly the component-min labelling
     // the neighbor-only iteration (and the recursive-CTE oracle)
     // reaches.
-    // finally-unpersist: the require exits below AND probe-harness
-    // job-group cancellations leave via exception — a return-path-only
-    // unpersist would leak the MEMORY_AND_DISK edge cache of a blown-up
-    // corpus into every subsequent leg of the shared bench JVM
+    // finally-unpersist: the require exits below AND job-group
+    // cancellations leave via exception — a return-path-only unpersist
+    // would leak the MEMORY_AND_DISK edge cache of a large corpus into
+    // every later query of a shared JVM
     try {
     while (changed > 0 && iter < maxIter) {
       // (1) compress the label forest to stars: label ← label(label)
@@ -906,12 +906,11 @@ object Dedup {
       bj + 1
 
   /** The sweep's candidate relation, (cfg, d1, d2), one row per pair per
-    * band layout — factored out so the ScaleProbe can run the two
-    * dedup shapes head-to-head on the dense blow-ups.
+    * band layout.
     *
-    * `emission = true` (the production path, r13; join key hashed
-    * r14): each side carries the cfg's band-key hashes so the banded
-    * join's multi-emissions dedup by a first-matching-band FILTER
+    * First-matching-band emission (r13; join key hashed r14): each
+    * side carries the cfg's band-key hashes so the banded join's
+    * multi-emissions dedup by a first-matching-band FILTER
     * instead of a distinct() — CandidateStreamSpec's registry walker
     * caught the sweep as the one remaining distinct-over-banded-join;
     * the filter form never exchanges a candidate row, and the per-cfg
@@ -933,16 +932,10 @@ object Dedup {
     * false MERGE, ≤ nb/2⁶⁴ per pair, the same accepted class as the
     * verify arrays (oracle parity certifies none fired; shape pinned
     * by DedupSpec's "forced earlier-band hash agreement" case, r13
-    * VERDICT #4).
-    *
-    * `emission = false` (PROBE-ONLY — the pre-r13 shape the scale rule
-    * forbids): dedup by `distinct()`, whose partial state and exchange
-    * are pair-sized — clique-quadratic on dense corpora. Kept solely so
-    * the ScaleProbe can measure what the rule prevents; never reachable
-    * from the registry. */
+    * VERDICT #4). The pre-r13 `distinct()` form had pair-sized partial
+    * state and exchange — clique-quadratic on dense corpora. */
   private[graft] def lshSweepCandidates(
-      docs: org.apache.spark.sql.DataFrame,
-      emission: Boolean): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     import graft.functions.TextFunctions._
@@ -966,37 +959,22 @@ object Dedup {
         concat_ws("|",
           (0 until r).map(k => col(s"m${j * r + k}").cast("string")): _*)
       }
-    if (emission) {
-      val bk = BandConfigs
-        .map { case (nb, r) =>
-          sig.select($"doc_id", lit(s"${nb}x$r").as("cfg"),
-              array(bandKeys(nb, r).map(xxhash64(_)): _*).as("allkh"))
-            .select($"doc_id", $"cfg", $"allkh",
-              posexplode($"allkh").as(Seq("bj", "kh")))
-        }
-        .reduce(_.unionAll(_))
-      bk.select($"cfg", $"bj", $"kh", $"allkh".as("ak1"),
-          $"doc_id".as("d1"))
-        .join(
-          bk.select($"cfg", $"bj", $"kh", $"allkh".as("ak2"),
-            $"doc_id".as("d2")),
-          Seq("cfg", "bj", "kh"))
-        .filter($"d1" < $"d2" && firstMatchingBand($"ak1", $"ak2", $"bj"))
-        .select($"cfg", $"d1", $"d2")
-    } else {
-      val bk = BandConfigs
-        .map { case (nb, r) =>
-          sig.select($"doc_id", lit(s"${nb}x$r").as("cfg"),
-            posexplode(array(bandKeys(nb, r): _*)).as(Seq("bj", "bkey")))
-        }
-        .reduce(_.unionAll(_))
-      bk.select($"cfg", $"bj", $"bkey", $"doc_id".as("d1"))
-        .join(bk.select($"cfg", $"bj", $"bkey", $"doc_id".as("d2")),
-          Seq("cfg", "bj", "bkey"))
-        .filter($"d1" < $"d2")
-        .select($"cfg", $"d1", $"d2")
-        .distinct()
-    }
+    val bk = BandConfigs
+      .map { case (nb, r) =>
+        sig.select($"doc_id", lit(s"${nb}x$r").as("cfg"),
+            array(bandKeys(nb, r).map(xxhash64(_)): _*).as("allkh"))
+          .select($"doc_id", $"cfg", $"allkh",
+            posexplode($"allkh").as(Seq("bj", "kh")))
+      }
+      .reduce(_.unionAll(_))
+    bk.select($"cfg", $"bj", $"kh", $"allkh".as("ak1"),
+        $"doc_id".as("d1"))
+      .join(
+        bk.select($"cfg", $"bj", $"kh", $"allkh".as("ak2"),
+          $"doc_id".as("d2")),
+        Seq("cfg", "bj", "kh"))
+      .filter($"d1" < $"d2" && firstMatchingBand($"ak1", $"ak2", $"bj"))
+      .select($"cfg", $"d1", $"d2")
   }
 
   private[graft] def lshBandSweepMeasured(
@@ -1010,7 +988,7 @@ object Dedup {
       if (truthSamplePermille >= 1000) docs0
       else docs0.filter(
         CorpusOps.sampleHash(col("doc_id"), "tr") < truthSamplePermille)
-    val cand = lshSweepCandidates(docs, emission = true)
+    val cand = lshSweepCandidates(docs)
     val truth = ngramJaccardAllPairs(docs)
       .filter(round($"jac", 4) >= 0.7)
       .select($"d1".as("t1"), $"d2".as("t2"))
@@ -1108,12 +1086,10 @@ object Dedup {
       .repartition(col("s"))
   }
 
-  /** The prefix-filtered CANDIDATE relation (d1, d2, n1, n2) — factored
-    * out so the ScaleProbe can A/B the two dedup shapes on the dense
-    * blow-ups, mirroring [[lshSweepCandidates]].
+  /** The prefix-filtered CANDIDATE relation (d1, d2, n1, n2).
     *
-    * `emission = true` (the production path, r14): FIRST-COMMON-HASH
-    * EMISSION. The candidate pair meets once per shared prefix
+    * FIRST-COMMON-HASH EMISSION (r14), mirroring [[lshSweepCandidates]].
+    * The candidate pair meets once per shared prefix
     * shingle, and this multi-emission used to be deduped by
     * distinct() — a pair-sized exchange with pair-keyed partial maps,
     * the r11e class the LSH sweep already abandoned; the r13 walker's
@@ -1132,15 +1108,9 @@ object Dedup {
     * (~ℓ²/2⁶⁵ per pair). Within-doc collisions are deduped by
     * array_distinct, keeping the exploded hash unique per doc. The
     * hash join key is also 8 B against the ~40 B shingle string the
-    * r13 join exchanged.
-    *
-    * `emission = false` (PROBE-ONLY — the pre-r14 string-keyed join +
-    * distinct() shape the scale rule forbids; kept solely so the
-    * ScaleProbe can measure what the rule prevents, never reachable
-    * from the registry). */
+    * r13 join exchanged. */
   private[graft] def prefixCandidates(
-      docs: org.apache.spark.sql.DataFrame,
-      emission: Boolean): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val posts = prefixPosts(docs)
@@ -1156,30 +1126,20 @@ object Dedup {
       // integer div — see prefixLen's double-ceil trap
       .filter($"r" <= $"n" - expr("(n * 4 + 4) div 5") + 1)
       .select($"doc_id", $"s", $"n")
-    if (emission) {
-      val perDoc = prefix
-        .select($"doc_id", $"n", xxhash64($"s").as("kh"))
-        .groupBy($"doc_id")
-        .agg(sort_array(array_distinct(collect_list($"kh"))).as("ph"),
-          max($"n").as("n"))
-      val side = perDoc.select($"doc_id", $"n", $"ph", explode($"ph").as("kh"))
-      side.as("a")
-        .join(side.as("b"),
-          $"a.kh" === $"b.kh" && $"a.doc_id" < $"b.doc_id" &&
-            $"a.n" * 5 >= $"b.n" * 4 && $"b.n" * 5 >= $"a.n" * 4)
-        .filter($"a.kh" ===
-          graft.plans.SortedIntersect.firstCommon($"a.ph", $"b.ph"))
-        .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"),
-          $"a.n".as("n1"), $"b.n".as("n2"))
-    } else {
-      prefix.as("a")
-        .join(prefix.as("b"),
-          $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id" &&
-            $"a.n" * 5 >= $"b.n" * 4 && $"b.n" * 5 >= $"a.n" * 4)
-        .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"),
-          $"a.n".as("n1"), $"b.n".as("n2"))
-        .distinct()
-    }
+    val perDoc = prefix
+      .select($"doc_id", $"n", xxhash64($"s").as("kh"))
+      .groupBy($"doc_id")
+      .agg(sort_array(array_distinct(collect_list($"kh"))).as("ph"),
+        max($"n").as("n"))
+    val side = perDoc.select($"doc_id", $"n", $"ph", explode($"ph").as("kh"))
+    side.as("a")
+      .join(side.as("b"),
+        $"a.kh" === $"b.kh" && $"a.doc_id" < $"b.doc_id" &&
+          $"a.n" * 5 >= $"b.n" * 4 && $"b.n" * 5 >= $"a.n" * 4)
+      .filter($"a.kh" ===
+        graft.plans.SortedIntersect.firstCommon($"a.ph", $"b.ph"))
+      .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"),
+        $"a.n".as("n1"), $"b.n".as("n2"))
   }
 
   /** The prefix-filtered join body behind [[qPrefixFilterJoin]] —
@@ -1188,7 +1148,7 @@ object Dedup {
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val cands = prefixCandidates(docs, emission = true)
+    val cands = prefixCandidates(docs)
     // Hash-array verify (r12, SCALE.md r11 residual #1): the common
     // count used to come from joining candidates back to the string
     // postings, so the pair stream crossed its exchange as

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions.words
 import graft.operators.CorpusOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -246,6 +246,44 @@ object GraphOps {
       .orderBy($"rnk")
   }
 
+  /** The undirected strong-trade graph behind the nation-graph audits
+    * (triangles, BFS, LPA, assortativity, k-core): lineitem counts per
+    * cust-nation → supp-nation pair, kept above the mean pair weight,
+    * self-loops dropped, collapsed to one (a < b) row per pair.
+    * [[strongTradeSql]] is the same relation as oracle CTEs `e`, `m`,
+    * `und`. Not materialized: each query cuts lineage where it reuses
+    * the graph. The oracle's `e` is MATERIALIZED: inlined into every
+    * `und` reference, DuckDB spilled over 20 GB of temp storage on
+    * q_triangle_count and q_assortativity at sf0.1. */
+  private def strongTradeUnd(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val e = Tables
+      .lineitem(s, d)
+      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
+      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
+      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
+      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
+      .agg(count(lit(1)).as("w"))
+    val m = e.agg(avg($"w").as("mw"))
+    e.crossJoin(broadcast(m))
+      .filter($"w" > $"mw" && $"src" =!= $"dst")
+      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+      .distinct()
+  }
+
+  private def strongTradeSql: String =
+    """e AS MATERIALIZED (
+      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      |  GROUP BY 1, 2),
+      |m AS (SELECT avg(w) AS mw FROM e),
+      |und AS (
+      |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst)""".stripMargin
+
   /** Triangle counting + local clustering coefficient over the nation
     * trade graph — the community-density audit beside [[qPagerank]]'s
     * centrality: directed trade edges are aggregated from the corpus,
@@ -262,17 +300,7 @@ object GraphOps {
     * never the raw corpus. */
   val qTriangleCount = QueryDef.sql(
     "q_triangle_count",
-    """WITH e AS (
-      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  GROUP BY 1, 2),
-      |m AS (SELECT avg(w) AS mw FROM e),
-      |und AS (
-      |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst),
+    s"""WITH $strongTradeSql,
       |deg AS (
       |  SELECT node, count(*) AS deg FROM (
       |    SELECT a AS node FROM und UNION ALL SELECT b FROM und)
@@ -300,19 +328,7 @@ object GraphOps {
       |ORDER BY nation""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val e = Tables
-      .lineitem(s, d)
-      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
-      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val m = e.agg(avg($"w").as("mw"))
-    val und = e
-      .crossJoin(broadcast(m))
-      .filter($"w" > $"mw" && $"src" =!= $"dst")
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
+    val und = strongTradeUnd(s, d)
       .coalesce(1).localCheckpoint() // aggregate-sized; reused three ways
     val deg = und.select($"a".as("node"))
       .unionAll(und.select($"b".as("node")))
@@ -385,17 +401,7 @@ object GraphOps {
   val qGraphBfs = QueryDef.sql(
     "q_graph_bfs", {
       val iters = bfsItersSql(BfsRounds)
-      s"""WITH e AS (
-         |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-         |  FROM lineitem l
-         |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  JOIN customer c ON o.o_custkey = c.c_custkey
-         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |  GROUP BY 1, 2),
-         |m AS (SELECT avg(w) AS mw FROM e),
-         |und AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst),
+      s"""WITH $strongTradeSql,
          |sym AS MATERIALIZED (
          |  SELECT a AS src, b AS dst FROM und
          |  UNION ALL SELECT b, a FROM und),
@@ -411,19 +417,7 @@ object GraphOps {
     }
   ) { (s, d) =>
     import s.implicits._
-    val e = Tables
-      .lineitem(s, d)
-      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
-      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val m = e.agg(avg($"w").as("mw"))
-    val und = e
-      .crossJoin(broadcast(m))
-      .filter($"w" > $"mw" && $"src" =!= $"dst")
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
+    val und = strongTradeUnd(s, d)
     val sym = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
       .coalesce(1).localCheckpoint() // aggregate-sized; reused every round
@@ -492,17 +486,7 @@ object GraphOps {
   val qLpaCommunities = QueryDef.sql(
     "q_lpa_communities", {
       val iters = lpaItersSql(LpaRounds)
-      s"""WITH e AS (
-         |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-         |  FROM lineitem l
-         |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  JOIN customer c ON o.o_custkey = c.c_custkey
-         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |  GROUP BY 1, 2),
-         |m AS (SELECT avg(w) AS mw FROM e),
-         |und AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst),
+      s"""WITH $strongTradeSql,
          |sym AS MATERIALIZED (
          |  SELECT a AS src, b AS dst FROM und
          |  UNION ALL SELECT b, a FROM und),
@@ -521,19 +505,7 @@ object GraphOps {
     }
   ) { (s, d) =>
     import s.implicits._
-    val e = Tables
-      .lineitem(s, d)
-      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
-      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val m = e.agg(avg($"w").as("mw"))
-    val und = e
-      .crossJoin(broadcast(m))
-      .filter($"w" > $"mw" && $"src" =!= $"dst")
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
+    val und = strongTradeUnd(s, d)
     val sym = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
       .coalesce(1).localCheckpoint()
@@ -578,17 +550,7 @@ object GraphOps {
     * joined edges — no window, no iteration. */
   val qAssortativity = QueryDef.sql(
     "q_assortativity",
-    """WITH e AS (
-      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  GROUP BY 1, 2),
-      |m AS (SELECT avg(w) AS mw FROM e),
-      |und AS (
-      |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst),
+    s"""WITH $strongTradeSql,
       |sym AS (
       |  SELECT a AS src, b AS dst FROM und
       |  UNION ALL SELECT b, a FROM und),
@@ -600,19 +562,7 @@ object GraphOps {
       |JOIN deg db ON db.node = sym.dst""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val e = Tables
-      .lineitem(s, d)
-      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
-      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val m = e.agg(avg($"w").as("mw"))
-    val und = e
-      .crossJoin(broadcast(m))
-      .filter($"w" > $"mw" && $"src" =!= $"dst")
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
+    val und = strongTradeUnd(s, d)
     val sym = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
     val deg = sym.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
@@ -660,17 +610,7 @@ object GraphOps {
   val qKcore = QueryDef.sql(
     "q_kcore", {
       val iters = kcoreItersSql(KCoreRounds, KCoreK)
-      s"""WITH e AS (
-         |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-         |  FROM lineitem l
-         |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  JOIN customer c ON o.o_custkey = c.c_custkey
-         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         |  GROUP BY 1, 2),
-         |m AS (SELECT avg(w) AS mw FROM e),
-         |und AS (
-         |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |  FROM e CROSS JOIN m WHERE w > mw AND src <> dst),
+      s"""WITH $strongTradeSql,
          |sym AS MATERIALIZED (
          |  SELECT a AS src, b AS dst FROM und
          |  UNION ALL SELECT b, a FROM und),
@@ -692,19 +632,7 @@ object GraphOps {
     }
   ) { (s, d) =>
     import s.implicits._
-    val e = Tables
-      .lineitem(s, d)
-      .join(Tables.orders(s, d), $"l_orderkey" === $"o_orderkey")
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .join(Tables.supplier(s, d), $"l_suppkey" === $"s_suppkey")
-      .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val m = e.agg(avg($"w").as("mw"))
-    val und = e
-      .crossJoin(broadcast(m))
-      .filter($"w" > $"mw" && $"src" =!= $"dst")
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
+    val und = strongTradeUnd(s, d)
     val sym = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
       .coalesce(1).localCheckpoint()
@@ -746,10 +674,9 @@ object GraphOps {
   // fixpoint, with the change count fused into each round's
   // materialization job (Iterate.matObserve — one driver round-trip per
   // round). They are the code path a production run uses when the graph
-  // shape is not known in advance; GraphOpsSpec pins fixed-round
-  // truncation vs converged exactness on a 600-hop path, and ScaleProbe
-  // carries @conv adapters that measure them on structure-varying
-  // blow-ups (SCALE.md).
+  // shape is not known in advance; LinkageGraphSpec pins fixed-round
+  // truncation vs converged exactness on 30- and 40-hop paths, and the
+  // *_converged registry queries run them on a deep chain.
   // ──────────────────────────────────────────────────────────────────
 
   /** Distance sentinel for unreached nodes in [[bfsDistancesConverged]]

@@ -27,39 +27,33 @@ object Iterate {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** AQE inside loop rounds is opt-in (`SPARK_GRAFT_LOOP_AQE=1`).
-    *
-    * With AQE on, each round's checkpoint splinters into one BLOCKING job
-    * per exchange (stage-by-stage materialization + re-optimization), and
-    * the convergence family is driver-latency bound: per-round plans are
-    * a join + aggregate over an already partitioned, cached edge list, so
-    * the adaptive re-planning buys nothing the static plan doesn't
-    * already have — while roughly doubling the per-round job count
-    * (measured r15, noop-sink runs: q_kcore_converged 70→40 jobs,
-    * q_lpa_converged 76→32, q_graph_bfs_converged 67→34, q_dedup_groups
-    * 29→18). The trade given away is runtime
-    * skew-splitting INSIDE a round; on a skewed production graph (hot
-    * nodes at 100 TB) set SPARK_GRAFT_LOOP_AQE=1 to take per-round skew
-    * handling back at the cost of per-round driver latency (guide §2.5 —
-    * AQE skew-join only fires on sort-merge/shuffled-hash joins, which
-    * these rounds only hit at real scale anyway). Scoped to the
-    * checkpoint EXECUTION only — the conf is set just for the eager
-    * action and restored in a finally, so declared plans, non-loop
-    * queries and the bench's timed dataflows keep session AQE. */
-  private val loopAqe = sys.env.get("SPARK_GRAFT_LOOP_AQE").contains("1")
-
   /** Run `f` (an eager materialization) with AQE scoped off, restoring
     * the session conf in a finally. Loop-safe: the bench/verify drivers
-    * execute queries sequentially on one thread. */
+    * execute queries sequentially on one thread.
+    *
+    * Why off: with AQE on, each round's checkpoint splinters into one
+    * BLOCKING job per exchange (stage-by-stage materialization +
+    * re-optimization), and the convergence family is driver-latency
+    * bound: per-round plans are a join + aggregate over an already
+    * partitioned, cached edge list, so the adaptive re-planning buys
+    * nothing the static plan doesn't already have — while roughly
+    * doubling the per-round job count (measured r15, noop-sink runs:
+    * q_kcore_converged 70→40 jobs, q_lpa_converged 76→32,
+    * q_graph_bfs_converged 67→34, q_dedup_groups 29→18). The trade
+    * given away is runtime skew-splitting INSIDE a round (guide §2.5 —
+    * AQE skew-join only fires on sort-merge/shuffled-hash joins, which
+    * these rounds only hit at real scale anyway); a loop on a skewed
+    * graph that needs it checkpoints through [[matObserveKeepAqe]] or a
+    * plain localCheckpoint instead. Scoped to the checkpoint EXECUTION
+    * only, so declared plans, non-loop queries and the bench's timed
+    * dataflows keep session AQE. */
   private def scopedNoAqe[T](spark: org.apache.spark.sql.SparkSession)(
-      f: => T): T =
-    if (loopAqe) f
-    else {
-      val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try f
-      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+      f: => T): T = {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try f
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
 
   /** `localCheckpoint()` under the same scoped-AQE-off policy as
     * [[matObserve]]. Adopt PER CALL SITE on measurement only: it wins

@@ -400,8 +400,7 @@ object Similarity {
     * n× the fixture needs `bitsPerTable ≈ 6 + log₂ n` to hold mean
     * bucket size — and with it per-row join work — CONSTANT. SCALE.md
     * finding 2 documented that dial; this parameter makes it a real
-    * code path (ScaleProbe's `@logbits` adapter measures it across
-    * decades), while `SimilaritySpec` pins that the default reproduces
+    * code path, while `SimilaritySpec` pins that the default reproduces
     * the oracle-gated registry query exactly. */
   private[graft] def embedNearDupLshMeasured(
       s: org.apache.spark.sql.SparkSession,

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared spec base: one local session per suite, graft defaults. */
+/** Shared spec base: one local session per suite, built by the same
+  * [[GraftSession.tunedBuilder]] that Bench, Verify and perfbench use. */
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.tunedBuilder(4, getClass.getSimpleName).getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 }
