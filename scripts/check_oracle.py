@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local emulation of the driver's correctness gate.
 
-Usage: python3 scripts/check_oracle.py [sfDir] [outDir]
+Usage: python3 scripts/check_oracle.py [sfDir] [outDir] [tempDir]
 
 1. Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already ran,
    producing <outDir>/<name>/ parquet dirs + <outDir>/oracle_sql.json.
@@ -10,18 +10,36 @@ Usage: python3 scripts/check_oracle.py [sfDir] [outDir]
    name, rows sorted by all columns, exact value match (the driver hashes —
    we diff so mismatches are debuggable).
 
+DuckDB runs under a memory limit and spills into a fresh directory under
+tempDir (default: the system temp directory), removed on exit. A query
+that fails on memory, disk or I/O (e.g. "No space left on device") is a
+SETUP-ERROR, not an oracle FAIL: it says nothing about the Spark result.
+
+Exit code: 0 all compared queries pass; 1 any FAIL; 2 no FAIL but at
+least one SETUP-ERROR (those queries were not checked).
+
 NOTE: driver-side tooling only (duckdb/pyarrow/pandas). The engine itself
 has no Python dependency.
 """
 import glob
 import json
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import numpy as np
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+DUCKDB_MEMORY_LIMIT = "4GB"
+
+
+def is_setup_error(e: Exception) -> bool:
+    """DuckDB ran out of memory, disk or I/O: the oracle could not run."""
+    return (isinstance(e, (duckdb.OutOfMemoryException, duckdb.IOException))
+            or "No space left on device" in str(e))
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -75,12 +93,23 @@ def signed_zero_diff(a: pd.DataFrame, b: pd.DataFrame):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+    tmp_root = sys.argv[3] if len(sys.argv) > 3 else tempfile.gettempdir()
+    spill = tempfile.mkdtemp(prefix="check_oracle_duckdb_", dir=tmp_root)
+    try:
+        sys.exit(check(sf, out, spill))
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def check(sf: str, out: str, spill: str) -> int:
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    ok, bad, rows_only = [], [], []
+    ok, bad, rows_only, setup = [], [], [], []
     names = sorted({p.split("/")[-1] for p in glob.glob(f"{out}/*") if not p.endswith(".json")})
     for name in names:
         files = glob.glob(f"{out}/{name}/*.parquet")
@@ -94,7 +123,7 @@ def main():
         try:
             duck_df = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            bad.append((name, f"duckdb error: {e}"))
+            (setup if is_setup_error(e) else bad).append((name, f"duckdb error: {e}"))
             continue
         a, b = canon(spark_df), canon(duck_df)
         if list(a.columns) != list(b.columns):
@@ -128,9 +157,11 @@ def main():
     print(f"PASS {len(ok)}: {ok}")
     for name, n in rows_only:
         print(f"ROWS-ONLY {name}: {n} rows" + ("  (!! EMPTY)" if n == 0 else ""))
+    for name, why in setup:
+        print(f"SETUP-ERROR {name}: {why}")
     for name, why in bad:
         print(f"FAIL {name}: {why}")
-    sys.exit(1 if bad else 0)
+    return 1 if bad else 2 if setup else 0
 
 
 if __name__ == "__main__":

@@ -302,168 +302,138 @@ object Dedup {
     // shrunken label table and its post-shuffle coalescing are worth
     // more than the extra driver round-trips they cost.
     val edges = ckpt(pairs.select($"d1", $"d2"))
-    // symmetrize and shuffle the edge list ONCE onto the hook-join key,
-    // then cache: InMemoryRelation preserves its cached plan's
-    // outputPartitioning, so every hook round's sym⋈labels reuses this
-    // layout and only the (node,label) side exchanges. At 1000× the edge
-    // list is the big relation in the loop — the r9 shape re-exchanged
-    // it every round. The partition count is pinned to
-    // spark.sql.shuffle.partitions so the join requirement matches
-    // exactly (an AQE-coalesced cache would force a per-round
-    // re-exchange right back). Cached (not checkpointed) because the
-    // LogicalRDD a checkpoint produces reports NO partitioning, which
-    // is exactly the reuse this exists for; joined only against labels
-    // (never itself), so the r9 stats trap cannot re-arm.
-    val sym = edges
+    // symmetrize and shuffle the edge list ONCE onto the hook-join key:
+    // at 1000× the edge list is the big relation in the loop — the r9
+    // shape re-exchanged it every round. Cached (not checkpointed)
+    // because the LogicalRDD a checkpoint produces reports NO
+    // partitioning, which is exactly the reuse this exists for; joined
+    // only against labels (never itself), so the r9 stats trap cannot
+    // re-arm.
+    val und = edges
       .select($"d1".as("src"), $"d2".as("dst"))
       .union(edges.select($"d2".as("src"), $"d1".as("dst")))
-      .repartition(s.sessionState.conf.numShufflePartitions, $"dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seed with the round-1 fixpoint state directly: label(n) =
-    // min(n, min direct neighbor). One groupBy replaces the
-    // distinct-then-propagate first round (every node of `sym` appears
-    // as src, so no left join is needed); pair components — the common
-    // near-dup case — then converge in a single verification round.
-    var labels = ckpt(sym
-      .groupBy($"src")
-      .agg(least($"src", min($"dst")).as("label"))
-      .select($"src".as("node"), $"label"))
-    // ROUND MATERIALIZATION = ONE JOB (the r10 round-overhead dial,
-    // SCALE.md): each round's state carries its pre-update label as
-    // `old`, and the change count rides the checkpoint job itself via
-    // Iterate.matObserve (observe + eager stats-dropping checkpoint).
-    // The r9 shape paid two driver round-trips per step
-    // (checkpoint-materialize, then count); at x1000 the ~120-small-job
-    // wall was round overhead, not work. Still a CHECKPOINT every step:
-    // the plan stays a flat LogicalRDD leaf (a persist-based variant was
-    // tried and rejected — logical lineage through a round that
-    // references `labels` three times grows the analyzed TREE 3^rounds,
-    // OOMing the driver before any stats math starts).
-    // KeepAqe variant: this loop's round joins are exactly the shape
-    // AQE's runtime broadcast conversion exists for (see the r10 A/B
-    // above); the graph fixpoints' pre-partitioned rounds use the
-    // AQE-off matObserve instead (r15 policy, Iterate.scaladoc).
-    import Iterate.{matObserveKeepAqe => matObserve}
-    var changed = 1L
-    var iter = 0
-    val maxIter = 64
-    // HOOK + FULL PATH COMPRESSION alternation (the Shiloach-Vishkin /
-    // star-contraction shape; Kiveris et al. 2014 "Connected Components
-    // in MapReduce and Beyond" analyze the round bound). Each outer
-    // round: (1) COMPRESS — iterate label ← label(label) to ITS OWN
-    // fixpoint, so every label tree becomes a star pointing at its
-    // current root (the inner loop halves pointer depth per step, so it
-    // is log(depth)-bounded and each step is one self-join of the
-    // (node, label) table); (2) HOOK — one neighbor-min round hooks
-    // adjacent stars together by their minima.
-    //
-    // Why not the single-shot label(label(n)) shortcut the r7 text used:
-    // on sparse high-diameter graphs (a loose threshold over a blown-up
-    // corpus produces exactly that — the r9 probe's 10x run formed a
-    // ~1.15-avg-degree giant component), low-id nodes scattered along a
-    // chain are LOCAL-MIN PLATEAUS: their label is self, so the jump
-    // label(label(n)) = label(n) is a no-op and the global min crawls
-    // hop-by-hop between plateaus — the measured convergence was a
-    // 1-19-changes/round trickle still going at round 64 (and the
-    // require below fired, correctly). Compressing to the ROOT between
-    // hooks removes the plateau problem: after compression every
-    // member's label is its tree root, so one hook round merges every
-    // star with the minimum over its whole FRONTIER, and the number of
-    // live stars at least halves per outer round — outer rounds ~
-    // log2(n), inner steps ~ log2(depth), both scale-safe.
-    //
-    // Every label value stays a node id of the same component (it
-    // entered via a neighbor or a label-of-label of one), labels only
-    // decrease, and an edge (u,v) is stable only when label(u) =
-    // label(v) — the fixpoint is exactly the component-min labelling
-    // the neighbor-only iteration (and the recursive-CTE oracle)
-    // reaches.
-    // finally-unpersist: the require exits below AND job-group
-    // cancellations leave via exception — a return-path-only unpersist
-    // would leak the MEMORY_AND_DISK edge cache of a large corpus into
-    // every later query of a shared JVM
-    try {
-    while (changed > 0 && iter < maxIter) {
-      // (1) compress the label forest to stars: label ← label(label)
-      // until stable (label(m) ≤ m always, so this is monotone and its
-      // depth halves per step)
-      // each materialization applies p∘p∘p (two chained joins against the
-      // SAME checkpointed relation), so pointer depth divides by 3 per
-      // JOB instead of by 2 per two jobs. The exit observes
-      // count(p³ ≠ p²): zero means p fixes every node in range(p²), and
-      // then the NEW state p' = p³ already satisfies p'∘p' = p' — the
-      // post-step forest is stars — so the usual "run one more pass to
-      // confirm nothing changed" job is never paid. (Labels only
-      // decrease along parent pointers, so p³ = p² pointwise really is
-      // the star fixpoint, not a 2-cycle artifact.)
-      var jDeep = 1L
-      var jIter = 0
-      while (jDeep > 0 && jIter < maxIter) {
-        val (nl, n) = matObserve(
-          labels
-            .join(
-              labels.select($"node".as("jnode"), $"label".as("jl")),
-              $"label" === $"jnode")
-            .join(
-              labels.select($"node".as("knode"), $"label".as("kl")),
-              $"jl" === $"knode")
-            .select($"node", $"kl".as("label"), $"jl"),
-          count(when($"label" =!= $"jl", lit(1))),
-          "jl")
-        jDeep = n
-        labels = nl
-        jIter += 1
-      }
-      require(jDeep == 0,
-        s"label compression did not stabilize after $maxIter steps — " +
-          "pointer depth cannot exceed 2^64; the iteration is broken")
-      // (2) hook WHOLE STARS, not members: per-node neighbor-min over
-      // the compressed labels, then min-aggregated PER STAR ROOT, then
-      // applied to every member through the label key. Hooking only the
-      // member that owns the cross-edge (what the r7 text did) leaves
-      // the root — and with it the rest of the star — unmoved, so stars
-      // drain one frontier node per round instead of merging: the
-      // measured trickle. With the star-level hook every non-minimal
-      // star merges into another star every round (its neighbor-min is
-      // smaller, or a neighbor sees IT as smaller), so live stars at
-      // least halve per outer round.
-      val prop = sym
-        .join(labels.withColumnRenamed("node", "pnode"), $"dst" === $"pnode")
+    Iterate.withEdgeCache(und, "dst") { sym =>
+      // seed with the round-1 fixpoint state directly: label(n) =
+      // min(n, min direct neighbor). One groupBy replaces the
+      // distinct-then-propagate first round (every node of `sym` appears
+      // as src, so no left join is needed); pair components — the common
+      // near-dup case — then converge in a single verification round.
+      val labels0 = ckpt(sym
         .groupBy($"src")
-        .agg(min($"label").as("nl"))
-      val hook = labels
-        .join(prop, $"node" === $"src")
-        .groupBy($"label")
-        .agg(min($"nl").as("m"))
-        .select($"label".as("hroot"), $"m")
-      // the old label rides along into the materialization so change
-      // detection is part of the same single job, not a second action
-      val (nl, n) = matObserve(
-        labels
-          .join(hook, $"label" === $"hroot", "left")
-          .select($"node",
-            least($"label", coalesce($"m", $"label")).as("label"),
-            $"label".as("old")),
-        count(when($"label" =!= $"old", lit(1))),
-        "old")
-      changed = n
-      labels = nl
-      iter += 1
+        .agg(least($"src", min($"dst")).as("label"))
+        .select($"src".as("node"), $"label"))
+      // ROUND MATERIALIZATION = ONE JOB (the r10 round-overhead dial,
+      // SCALE.md): each round's state carries its pre-update label as
+      // `old`, and the change count rides the checkpoint job itself
+      // (Iterate.fixpoint's observed rounds). The r9 shape paid two driver
+      // round-trips per step (checkpoint-materialize, then count); at
+      // x1000 the ~120-small-job wall was round overhead, not work. Still
+      // a CHECKPOINT every step: the plan stays a flat LogicalRDD leaf (a
+      // persist-based variant was tried and rejected — logical lineage
+      // through a round that references `labels` three times grows the
+      // analyzed TREE 3^rounds, OOMing the driver before any stats math
+      // starts). AQE stays on (see the r10 A/B above).
+      val maxIter = 64
+      // HOOK + FULL PATH COMPRESSION alternation (the Shiloach-Vishkin /
+      // star-contraction shape; Kiveris et al. 2014 "Connected Components
+      // in MapReduce and Beyond" analyze the round bound). Each outer
+      // round: (1) COMPRESS — iterate label ← label(label) to ITS OWN
+      // fixpoint, so every label tree becomes a star pointing at its
+      // current root (the inner loop halves pointer depth per step, so it
+      // is log(depth)-bounded and each step is one self-join of the
+      // (node, label) table); (2) HOOK — one neighbor-min round hooks
+      // adjacent stars together by their minima.
+      //
+      // Why not the single-shot label(label(n)) shortcut the r7 text used:
+      // on sparse high-diameter graphs (a loose threshold over a blown-up
+      // corpus produces exactly that — the r9 probe's 10x run formed a
+      // ~1.15-avg-degree giant component), low-id nodes scattered along a
+      // chain are LOCAL-MIN PLATEAUS: their label is self, so the jump
+      // label(label(n)) = label(n) is a no-op and the global min crawls
+      // hop-by-hop between plateaus — the measured convergence was a
+      // 1-19-changes/round trickle still going at round 64 (and the
+      // require below fired, correctly). Compressing to the ROOT between
+      // hooks removes the plateau problem: after compression every
+      // member's label is its tree root, so one hook round merges every
+      // star with the minimum over its whole FRONTIER, and the number of
+      // live stars at least halves per outer round — outer rounds ~
+      // log2(n), inner steps ~ log2(depth), both scale-safe.
+      //
+      // Every label value stays a node id of the same component (it
+      // entered via a neighbor or a label-of-label of one), labels only
+      // decrease, and an edge (u,v) is stable only when label(u) =
+      // label(v) — the fixpoint is exactly the component-min labelling
+      // the neighbor-only iteration (and the recursive-CTE oracle)
+      // reaches.
+      val hooked = Iterate.fixpoint(labels0, maxIter, aqe = true) { (forest, _) =>
+        // (1) compress the label forest to stars: label ← label(label)
+        // until stable (label(m) ≤ m always, so this is monotone and its
+        // depth halves per step)
+        // each materialization applies p∘p∘p (two chained joins against the
+        // SAME checkpointed relation), so pointer depth divides by 3 per
+        // JOB instead of by 2 per two jobs. The exit observes
+        // count(p³ ≠ p²): zero means p fixes every node in range(p²), and
+        // then the NEW state p' = p³ already satisfies p'∘p' = p' — the
+        // post-step forest is stars — so the usual "run one more pass to
+        // confirm nothing changed" job is never paid. (Labels only
+        // decrease along parent pointers, so p³ = p² pointwise really is
+        // the star fixpoint, not a 2-cycle artifact.)
+        val stars = Iterate.fixpoint(forest, maxIter, aqe = true) { (p, _) =>
+          Iterate.Round(
+            p
+              .join(p.select($"node".as("jnode"), $"label".as("jl")),
+                $"label" === $"jnode")
+              .join(p.select($"node".as("knode"), $"label".as("kl")),
+                $"jl" === $"knode")
+              .select($"node", $"kl".as("label"), $"jl"),
+            Some(count(when($"label" =!= $"jl", lit(1)))),
+            Seq("jl"))
+        }
+        require(stars.change == 0,
+          s"label compression did not stabilize after $maxIter steps — " +
+            "pointer depth cannot exceed 2^64; the iteration is broken")
+        val labels = stars.state
+        // (2) hook WHOLE STARS, not members: per-node neighbor-min over
+        // the compressed labels, then min-aggregated PER STAR ROOT, then
+        // applied to every member through the label key. Hooking only the
+        // member that owns the cross-edge (what the r7 text did) leaves
+        // the root — and with it the rest of the star — unmoved, so stars
+        // drain one frontier node per round instead of merging: the
+        // measured trickle. With the star-level hook every non-minimal
+        // star merges into another star every round (its neighbor-min is
+        // smaller, or a neighbor sees IT as smaller), so live stars at
+        // least halve per outer round.
+        val prop = sym
+          .join(labels.withColumnRenamed("node", "pnode"), $"dst" === $"pnode")
+          .groupBy($"src")
+          .agg(min($"label").as("nl"))
+        val hook = labels
+          .join(prop, $"node" === $"src")
+          .groupBy($"label")
+          .agg(min($"nl").as("m"))
+          .select($"label".as("hroot"), $"m")
+        // the old label rides along into the materialization so change
+        // detection is part of the same single job, not a second action
+        Iterate.Round(
+          labels
+            .join(hook, $"label" === $"hroot", "left")
+            .select($"node",
+              least($"label", coalesce($"m", $"label")).as("label"),
+              $"label".as("old")),
+          Some(count(when($"label" =!= $"old", lit(1)))),
+          Seq("old"))
+      }
+      // a silent non-converged exit would emit plausible-but-wrong group
+      // labels (and diverge from the recursive-CTE oracle); refuse instead.
+      // star contraction at least halves the live-star count per outer
+      // round, so 64 rounds cover any component 2^64 nodes could form —
+      // hitting this means the iteration is broken, not the data.
+      require(hooked.change == 0,
+        s"connectedComponents did not converge after $maxIter rounds " +
+          s"(${hooked.change} labels still changing); star contraction " +
+          "halves the live-star count per round — this cannot be the data")
+      hooked.state
     }
-    // a silent non-converged exit would emit plausible-but-wrong group
-    // labels (and diverge from the recursive-CTE oracle); refuse instead.
-    // star contraction at least halves the live-star count per outer
-    // round, so 64 rounds cover any component 2^64 nodes could form —
-    // hitting this means the iteration is broken, not the data.
-    require(changed == 0,
-      s"connectedComponents did not converge after $maxIter rounds " +
-        s"($changed labels still changing); star contraction halves the " +
-        "live-star count per round — this cannot be the data")
-    // labels is a checkpoint (safe to keep), so the edge cache is
-    // released in the finally — nine registry consumers run inside one
-    // bench JVM and leaked MEMORY_AND_DISK blocks would accumulate
-    } finally sym.unpersist(false)
-    labels
   }
 
   /** Dedup-group assignment: connected components over the MinHash-LSH

@@ -1919,24 +1919,20 @@ object Events {
     val closed = pairs
       .join(broadcast(srcs.select($"a".as("bb"))), $"b" === $"bb", "left_semi")
     val tot = closed.groupBy($"a").agg(sum($"n").as("na"))
-    val pm = Iterate.ckptRound(closed
+    val pm = Iterate.checkpoint(closed
       .join(broadcast(tot), "a")
       .select($"a", $"b", ($"n" * lit(1.0) / $"na").as("p"))
-      .coalesce(1))
+      .coalesce(1), aqe = false)
     val k = tot.count()
-    var pi = Iterate.ckptRound(
-      tot.select($"a".as("t"), lit(1.0 / k).as("pi")).coalesce(1))
-    (0 until MarkovRounds).foreach { i =>
-      val next = pm
+    val pi0 = Iterate.checkpoint(
+      tot.select($"a".as("t"), lit(1.0 / k).as("pi")).coalesce(1), aqe = false)
+    val pi = Iterate.fixpoint(pi0, MarkovRounds, aqe = false) { (pi, _) =>
+      Iterate.Round(pm
         .join(pi, pi("t") === pm("a"))
         .groupBy(pm("b").as("bt"))
         .agg(sum($"pi" * $"p").as("pi"))
-        .select($"bt".as("t"), $"pi")
-      pi =
-        if (i % 3 == 2 || i == MarkovRounds - 1)
-          Iterate.ckptRound(next.coalesce(1))
-        else next
-    }
+        .select($"bt".as("t"), $"pi"))
+    }.state
     val emp = Tables.events(s, d)
       .join(broadcast(tot.select($"a".as("event_type"))), "event_type")
       .groupBy($"event_type")

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * on the join key — on a real cluster the edge side is pre-partitioned
   * once and every round reuses its layout) plus an O(nodes) aggregate;
   * the dangling-mass and node-count terms are 1-row broadcasts. Ranks
-  * are `localCheckpoint`ed every round so the lineage never deepens —
-  * the same cut [[Dedup.connectedComponents]] uses.
+  * are checkpointed every 3rd round by [[Iterate.fixpoint]] so the
+  * lineage stays bounded.
   */
 object GraphOps {
 
@@ -96,20 +96,12 @@ object GraphOps {
       .join(srcsDf, nodes("node") === srcsDf("src"), "left_anti")
       .limit(1).count() > 0
     val srcs = if (hasDangling) Some(srcsDf) else None
-    var pr = nodes
+    val pr0 = nodes
       .select(col("node"), lit(1.0 / n).as("pr"))
       .coalesce(1).localCheckpoint()
-    // lineage cut every 3rd round (not every round): each eager
-    // localCheckpoint is a full job round-trip, and three rounds of
-    // join+agg lineage is still well inside planner comfort — 3x fewer
-    // fixed-cost jobs for the same bounded lineage depth
-    (0 until iters).foreach { i =>
-      val next = pagerankStep(nodes, enorm, srcs, n, pr)
-      pr =
-        if (i % 3 == 2 || i == iters - 1) next.coalesce(1).localCheckpoint()
-        else next
-    }
-    pr
+    Iterate.fixpoint(pr0, iters, aqe = true) { (pr, _) =>
+      Iterate.Round(pagerankStep(nodes, enorm, srcs, n, pr))
+    }.state
   }
 
   /** Weighted PageRank over the nation-level trade graph: an edge
@@ -422,25 +414,22 @@ object GraphOps {
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
       .coalesce(1).localCheckpoint() // aggregate-sized; reused every round
     val seed = sym.agg(min($"src")).as[Long].head()
-    var dist = sym
+    val dist0 = sym
       .select($"src".as("node")).distinct()
       .select($"node",
         when($"node" === seed, 0L).otherwise(99L).as("dist"))
       .coalesce(1).localCheckpoint()
-    (0 until BfsRounds).foreach { i =>
+    val dist = Iterate.fixpoint(dist0, BfsRounds, aqe = true) { (dist, _) =>
       val relax = sym
         .join(dist, dist("node") === sym("src"))
         .filter($"dist" < 99)
         .groupBy(sym("dst").as("rnode"))
         .agg(min($"dist" + 1).as("relax"))
-      val next = dist
+      Iterate.Round(dist
         .join(relax, $"rnode" === dist("node"), "left")
         .select(dist("node"),
-          least($"dist", coalesce($"relax", lit(Long.MaxValue))).as("dist"))
-      dist =
-        if (i % 3 == 2 || i == BfsRounds - 1) next.coalesce(1).localCheckpoint()
-        else next
-    }
+          least($"dist", coalesce($"relax", lit(Long.MaxValue))).as("dist")))
+    }.state
     Tables
       .nation(s, d)
       .join(dist, $"n_nationkey" === $"node")
@@ -509,12 +498,12 @@ object GraphOps {
     val sym = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
       .coalesce(1).localCheckpoint()
-    var lab = sym.select($"src".as("node")).distinct()
+    val lab0 = sym.select($"src".as("node")).distinct()
       .select($"node", $"node".as("lab"))
       .coalesce(1).localCheckpoint()
     val wMode = Window.partitionBy($"vnode")
       .orderBy($"c".desc, $"nlab")
-    (0 until LpaRounds).foreach { i =>
+    val lab = Iterate.fixpoint(lab0, LpaRounds, aqe = true) { (lab, _) =>
       val best = sym
         .join(lab, lab("node") === sym("src"))
         .groupBy(sym("dst").as("vnode"), $"lab".as("nlab"))
@@ -522,13 +511,10 @@ object GraphOps {
         .withColumn("rn", row_number().over(wMode))
         .filter($"rn" === 1)
         .select($"vnode", $"nlab".as("best"))
-      val next = lab
+      Iterate.Round(lab
         .join(best, $"vnode" === lab("node"), "left")
-        .select(lab("node"), coalesce($"best", $"lab").as("lab"))
-      lab =
-        if (i % 3 == 2 || i == LpaRounds - 1) next.coalesce(1).localCheckpoint()
-        else next
-    }
+        .select(lab("node"), coalesce($"best", $"lab").as("lab")))
+    }.state
     val cs = lab.groupBy($"lab").agg(count(lit(1)).as("comm_size"))
     Tables
       .nation(s, d)
@@ -643,16 +629,9 @@ object GraphOps {
       .join(surv.select($"node".as("nb")), $"nb" === sym("dst"))
       .groupBy(sym("src").as("node"))
       .agg(count(lit(1)).as("deg"))
-    var surv = all
-    (0 until KCoreRounds).foreach { r =>
-      val next = coreDeg(surv)
-        .filter($"deg" >= KCoreK)
-        .select($"node")
-      surv =
-        if (r % 3 == 2 || r == KCoreRounds - 1)
-          next.coalesce(1).localCheckpoint()
-        else next
-    }
+    val surv = Iterate.fixpoint(all, KCoreRounds, aqe = true) { (surv, _) =>
+      Iterate.Round(coreDeg(surv).filter($"deg" >= KCoreK).select($"node"))
+    }.state
     val cd = coreDeg(surv)
     all
       .join(Tables.nation(s, d), $"n_nationkey" === $"node")
@@ -672,7 +651,7 @@ object GraphOps {
   // sentinel, k-core peeling stops mid-peel, LPA freezes mid-flood.
   // These variants run the IDENTICAL per-round dataflow to its own
   // fixpoint, with the change count fused into each round's
-  // materialization job (Iterate.matObserve — one driver round-trip per
+  // materialization job (Iterate.fixpoint — one driver round-trip per
   // round). They are the code path a production run uses when the graph
   // shape is not known in advance; LinkageGraphSpec pins fixed-round
   // truncation vs converged exactness on 30- and 40-hop paths, and the
@@ -698,81 +677,65 @@ object GraphOps {
     import s.implicits._
     import org.apache.spark.sql.graftbridge.DatasetBridge.{
       localCheckpointFreshStats => ckpt}
-    val sym = symIn
-      .repartition(s.sessionState.conf.numShufflePartitions, $"src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = sym.agg(min($"src")).head.getLong(0)
-    var dist = ckpt(
-      sym.select($"src".as("node")).distinct()
-        .select($"node",
-          when($"node" === seed, 0L).otherwise(BfsUnreached).as("dist")))
-    var changed = 1L
-    var rounds = 0
-    // finally-unpersist: probe/bench harnesses cancel blown-up legs via
-    // job-group cancellation, which surfaces here as an exception — a
-    // return-path-only unpersist would leak the MEMORY_AND_DISK edge
-    // cache into every subsequent leg of the shared JVM
-    try {
-      while (changed > 0) {
-        // distances only DECREASE, each changing round lowers ≥1 node, and
-        // values are bounded below by 0 — termination needs no round cap
+    Iterate.withEdgeCache(symIn, "src") { sym =>
+      val seed = sym.agg(min($"src")).head.getLong(0)
+      val dist0 = ckpt(
+        sym.select($"src".as("node")).distinct()
+          .select($"node",
+            when($"node" === seed, 0L).otherwise(BfsUnreached).as("dist")))
+      // distances only DECREASE, each changing round lowers ≥1 node, and
+      // values are bounded below by 0 — termination needs no round cap
+      Iterate.fixpoint(dist0, Int.MaxValue, aqe = false) { (dist, _) =>
         val relax = sym
           .join(dist.withColumnRenamed("node", "dn"), $"dn" === $"src")
           .filter($"dist" < BfsUnreached)
           .groupBy($"dst".as("rnode"))
           .agg(min($"dist" + 1).as("relax"))
-        val (nd, n) = Iterate.matObserve(
+        Iterate.Round(
           dist
             .join(relax, $"rnode" === $"node", "left")
             .select($"node",
               least($"dist", coalesce($"relax", lit(Long.MaxValue)))
                 .as("dist"),
               $"dist".as("old")),
-          count(when($"dist" =!= $"old", lit(1))),
-          "old")
-        dist = nd
-        changed = n
-        rounds += 1
-      }
-    } finally sym.unpersist(false)
-    dist
+          Some(count(when($"dist" =!= $"old", lit(1)))),
+          Seq("old"))
+      }.state
+    }
   }
 
   /** k-core peeling iterated to the fixpoint (surviving set stops
     * shrinking). Peeling is monotone, so an unchanged COUNT means an
     * unchanged SET and the observed row count doubles as the change
     * test — one job per peel round. Worst case is Θ(n) rounds (a path
-    * peels two ends per round — the adversarial shape GraphOpsSpec and
-    * the @conv probe use); real graphs converge in a handful. Returns
-    * the surviving (node) set. */
+    * peels two ends per round — the adversarial shape LinkageGraphSpec
+    * uses); real graphs converge in a handful. Returns the surviving
+    * (node) set. */
   private[graft] def kcoreConverged(symIn: DataFrame, k: Int): DataFrame = {
     val s = symIn.sparkSession
     import s.implicits._
     import org.apache.spark.sql.graftbridge.DatasetBridge.{
       localCheckpointFreshStats => ckpt}
-    val sym = symIn
-      .repartition(s.sessionState.conf.numShufflePartitions, $"src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var surv = ckpt(sym.select($"src".as("node")).distinct())
-    try {
-      var prev = surv.count()
-      var changed = 1L
-      while (changed > 0 && prev > 0) {
-        val (nx, cnt) = Iterate.matObserve(
-          sym
-            .join(surv.select($"node".as("na")), $"na" === $"src")
-            .join(surv.select($"node".as("nb")), $"nb" === $"dst")
-            .groupBy($"src".as("node"))
-            .agg(count(lit(1)).as("deg"))
-            .filter($"deg" >= k)
-            .select($"node"),
-          count(lit(1)))
-        surv = nx
-        changed = prev - cnt
-        prev = cnt
-      }
-    } finally sym.unpersist(false) // cancelled-leg path must not leak the edge cache
-    surv
+    Iterate.withEdgeCache(symIn, "src") { sym =>
+      val all = ckpt(sym.select($"src".as("node")).distinct())
+      var size = all.count()
+      // the change is the number peeled, |surv| − |next|; an emptied set
+      // reads 0 and stops too
+      Iterate.fixpoint(all, if (size > 0) Int.MaxValue else 0, aqe = false) {
+        (surv, peeled) =>
+          if (peeled > 0) size -= peeled
+          val n = count(lit(1))
+          Iterate.Round(
+            sym
+              .join(surv.select($"node".as("na")), $"na" === $"src")
+              .join(surv.select($"node".as("nb")), $"nb" === $"dst")
+              .groupBy($"src".as("node"))
+              .agg(count(lit(1)).as("deg"))
+              .filter($"deg" >= k)
+              .select($"node"),
+            Some(when(n === 0, lit(0L)).otherwise(lit(size) - n)))
+      }.state
+    }
   }
 
   /** Synchronous LPA run until labels stabilize OR `maxRounds`.
@@ -790,17 +753,12 @@ object GraphOps {
     import s.implicits._
     import org.apache.spark.sql.graftbridge.DatasetBridge.{
       localCheckpointFreshStats => ckpt}
-    val sym = symIn
-      .repartition(s.sessionState.conf.numShufflePartitions, $"src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lab = ckpt(
-      sym.select($"src".as("node")).distinct().select($"node", $"node".as("lab")))
-    var changed = 1L
-    var rounds = 0
-    try {
-      while (changed > 0 && rounds < maxRounds) {
-        val wBest = org.apache.spark.sql.expressions.Window
-          .partitionBy($"bnode").orderBy($"c".desc, $"nlab")
+    val wBest = org.apache.spark.sql.expressions.Window
+      .partitionBy($"bnode").orderBy($"c".desc, $"nlab")
+    Iterate.withEdgeCache(symIn, "src") { sym =>
+      val lab0 = ckpt(
+        sym.select($"src".as("node")).distinct().select($"node", $"node".as("lab")))
+      val f = Iterate.fixpoint(lab0, maxRounds, aqe = false) { (lab, _) =>
         val best = sym
           .join(lab.withColumnRenamed("node", "ln"), $"ln" === $"src")
           .groupBy($"dst".as("bnode"), $"lab".as("nlab"))
@@ -808,19 +766,16 @@ object GraphOps {
           .withColumn("rn", row_number().over(wBest))
           .filter($"rn" === 1)
           .select($"bnode", $"nlab".as("best"))
-        val (nl, n) = Iterate.matObserve(
+        Iterate.Round(
           lab
             .join(best, $"bnode" === $"node", "left")
             .select($"node", coalesce($"best", $"lab").as("lab"),
               $"lab".as("old")),
-          count(when($"lab" =!= $"old", lit(1))),
-          "old")
-        lab = nl
-        changed = n
-        rounds += 1
+          Some(count(when($"lab" =!= $"old", lit(1)))),
+          Seq("old"))
       }
-    } finally sym.unpersist(false) // cancelled-leg path must not leak the edge cache
-    (lab, changed == 0L)
+      (f.state, f.change == 0L)
+    }
   }
 
   // ──────────────────────────────────────────────────────────────────

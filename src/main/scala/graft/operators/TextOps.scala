@@ -1188,9 +1188,9 @@ object TextOps {
       .as[(String, Long)]
       .rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // finally-unpersist: a job-group cancellation mid-EM (probe/bench
-    // harness) leaves via exception; the return-path-only unpersist
-    // would leak the cached wordcount RDD into the shared JVM
+    // finally-unpersist: a failed job mid-EM leaves via exception, and a
+    // return-path-only unpersist would leak the cached wordcount RDD into
+    // the shared JVM
     try {
     // observed characters: always retained (they are the fallback floor)
     val charCounts = hist

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{MinBy, Partial}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 import graft.operators.Pipeline
 
 /** Pins for the r15 exact-dup keeper (Pipeline.cleanedDocsOf): one
@@ -8,8 +13,24 @@ import graft.operators.Pipeline
   * mega-clique of exact duplicates is crushed per map task BEFORE the
   * exchange, never assembled in one window/task (the r14 verdict's
   * 100 TB skew hazard #1). */
-class PipelineKeeperSpec extends SparkSpec {
+class PipelineKeeperSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Aggregate nodes that run `min_by` in Partial mode (map side, before
+    * the exchange), searched through AQE's current plan and its
+    * subqueries. */
+  private def partialMinBys(p: SparkPlan): Seq[SparkPlan] =
+    collectWithSubqueries(p) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+          e.mode == Partial && e.aggregateFunction.isInstanceOf[MinBy]) => a
+    }
+
+  /** Window operators of any kind. */
+  private def windows(p: SparkPlan): Seq[SparkPlan] =
+    collectWithSubqueries(p) {
+      case w: WindowExecBase => w
+      case w: WindowGroupLimitExec => w
+    }
 
   // a quality-gate-passing text: >=100 chars, high distinct-word ratio
   private val base: String =
@@ -29,19 +50,19 @@ class PipelineKeeperSpec extends SparkSpec {
     // executed-plan shape: the keeper is a partial+final min_by aggregate
     // (clique reduced to one buffered row per map task before the
     // exchange) and there is NO window operator anywhere in the keeper
-    val p = out.queryExecution.executedPlan.toString
-    assert(p.contains("partial_min_by"),
+    val p = out.queryExecution.executedPlan
+    assert(partialMinBys(p).nonEmpty,
       s"keeper must partial-aggregate before its exchange:\n$p")
-    assert(!p.contains("Window"),
+    assert(windows(p).isEmpty,
       s"keeper must not plan a window over the content hash:\n$p")
   }
 
   test("clean-corpus pipeline plans the keeper without any window over md5(text)") {
     val df = SparkEntry.queries("q_pipeline_clean_corpus")(spark, sf)
     df.collect() // finalize the adaptive plan
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("partial_min_by"), s"expected partial min_by keeper:\n$p")
-    assert(!p.contains("Window"),
+    val p = df.queryExecution.executedPlan
+    assert(partialMinBys(p).nonEmpty, s"expected partial min_by keeper:\n$p")
+    assert(windows(p).isEmpty,
       s"clean corpus must have no window operator (keeper was the only one):\n$p")
   }
 
