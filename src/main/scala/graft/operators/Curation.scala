@@ -552,9 +552,9 @@ object Curation {
 
   /** Cluster count for a corpus of `nVectors`: ceil(n / target), min 16.
     * Matches the oracle's `greatest(16, ceil(count(*) / target))`. */
-  private[graft] def semanticCellCount(nVectors: Long,
-      targetCellRows: Long = SemanticCellTarget): Int =
-    math.max(16L, (nVectors + targetCellRows - 1) / targetCellRows).toInt
+  private[graft] def semanticCellCount(nVectors: Long): Int =
+    math.max(16L, (nVectors + SemanticCellTarget - 1) / SemanticCellTarget)
+      .toInt
 
   /** Deterministic cell assignment shared by [[qSemanticDedup]] and the
     * bounded-cell spec — TWO-LEVEL (coarse→fine) IVF routing, the r10
@@ -1189,7 +1189,7 @@ object Curation {
     * distinct-value estimation under multiset operations") so its cost
     * stops depending on the shingle vocabulary. Each source's distinct
     * 3-shingle set is summarized by its k=128 smallest stableHash60
-    * values via the mergeable [[graft.plans.KmvSketchAgg]]; every
+    * values via the mergeable `KmvAgg.kmvSketch`; every
     * pairwise estimate — union cardinality and Jaccard — is then array
     * arithmetic over two 1 KB rows.
     *
@@ -1246,7 +1246,7 @@ object Curation {
       .select($"source", explode(shingles($"w", 3)).as("sh"))
       .select($"source", stableHash60($"sh").as("h"))
       .groupBy($"source")
-      .agg(graft.plans.KmvSketchAgg.kmvSketch($"h", KmvK).as("sk"))
+      .agg(graft.plans.KmvAgg.kmvSketch($"h", KmvK).as("sk"))
     val pairs = sketches
       .select($"source".as("src_a"), $"sk".as("ska"))
       .join(

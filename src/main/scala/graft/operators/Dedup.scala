@@ -98,10 +98,9 @@ object Dedup {
     ngramJaccardPairs(Tables.documents(s, d)).orderBy($"d1", $"d2")
   }
 
-  /** Exact n-gram Jaccard ≥ 0.8 near-dup pairs (d1 < d2, jaccard) over an
-    * arbitrary documents slice — the ground-truth side of the recall
-    * measurements, column-parameterized so it can run on a hash-sampled
-    * slice at corpus scale ([[lshRecallMeasured]]).
+  /** Exact n-gram Jaccard ≥ 0.8 near-dup pairs (d1 < d2, jaccard) over a
+    * documents frame — [[qNgramJaccard]] and the ground-truth side of
+    * [[qLshRecall]].
     *
     * Per-doc distinct via array_distinct BEFORE exploding (the shingle
     * set is per-document — no cross-doc distinct shuffle needed); the
@@ -535,13 +534,10 @@ object Dedup {
   /** LSH dedup quality measurement (the dedup twin of q_ann_recall):
     * MinHash-LSH candidate pairs scored against the exact Jaccard ≥ 0.8
     * ground truth — recall (how many true near-dup pairs the bands
-    * surface) and precision (how much of the candidate set is real).
-    * At production scale the truth side runs on a sampled slice — a real
-    * code path via [[lshRecallMeasured]]'s permille knob, spec-covered;
-    * the fixture-scale gate measures the full corpus. The oracle inlines
-    * BOTH CTE chains (sharing the distinct-shingle stream) and the
-    * ratios use the tie-safe floor(x·10⁴+0.5) rounding — they are exact
-    * rationals of counts. */
+    * surface) and precision (how much of the candidate set is real),
+    * over the full corpus. The oracle inlines BOTH CTE chains (sharing
+    * the distinct-shingle stream) and the ratios use the tie-safe
+    * floor(x·10⁴+0.5) rounding — they are exact rationals of counts. */
   val qLshRecall = QueryDef.sql(
     "q_dedup_lsh_recall",
     s"""WITH $minhashPairsCtes,
@@ -565,28 +561,8 @@ object Dedup {
        |  floor((SELECT count(*) FROM hit) * 10000.0 /
        |        (SELECT count(*) FROM cand) + 0.5) / 10000.0 AS pair_precision""".stripMargin
   ) { (s, d) =>
-    lshRecallMeasured(s, d)
-  }
-
-  /** The LSH recall/precision measurement, with the production-scale
-    * truth-sampling knob as a REAL code path: `truthSamplePermille <
-    * 1000` restricts the whole measurement (exact-Jaccard truth AND the
-    * banding candidates it is compared against) to a deterministic hash
-    * sample of documents — the quadratic-ish truth side then costs
-    * O((p·n)²-per-shingle-bucket) on the slice only, while the estimate
-    * remains an unbiased read of corpus recall because the sample is a
-    * pure per-row hash predicate. Default 1000 = the full fixture-scale
-    * gate ([[qLshRecall]]). */
-  private[graft] def lshRecallMeasured(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      truthSamplePermille: Int = 1000): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val docs0 = Tables.documents(s, d)
-    val docs =
-      if (truthSamplePermille >= 1000) docs0
-      else docs0.filter(
-        CorpusOps.sampleHash(col("doc_id"), "tr") < truthSamplePermille)
+    val docs = Tables.documents(s, d)
     val truth = ngramJaccardPairs(docs).select($"d1", $"d2")
     val cand = CorpusOps.minhashCandidates(docs, "doc_id", "text")
     // ONE pass over each leg (r14 optimization, guide §2.4): the old
@@ -775,9 +751,7 @@ object Dedup {
     * Scale: signatures are one shingle exchange + 16 min-aggregates;
     * all four layouts share it, adding only Σ bands = 30 band-key rows
     * per doc to the banded equi-join. The exact truth join is the
-    * fixture-scale audit side; [[lshBandSweepMeasured]]'s
-    * truthSamplePermille knob (spec-covered) runs the identical sweep
-    * on a deterministic hash slice for real corpora. */
+    * fixture-scale audit side. */
   val qLshBandSweep = QueryDef.sql(
     "q_lsh_band_sweep", {
       val p = graft.functions.TextFunctions.MinhashP
@@ -841,22 +815,38 @@ object Dedup {
          |ORDER BY cfg""".stripMargin
     }
   ) { (s, d) =>
-    lshBandSweepMeasured(s, d)
+    import s.implicits._
+    val docs = Tables.documents(s, d)
+    val cand = lshSweepCandidates(docs)
+    val truth = ngramJaccardAllPairs(docs)
+      .filter(round($"jac", 4) >= 0.7)
+      .select($"d1".as("t1"), $"d2".as("t2"))
+      .localCheckpoint()
+    val nTrue = truth.agg(count(lit(1)).as("n_true"))
+    // ONE pass over the candidate stream for both per-cfg counts
+    // (r14 optimization, guide §2.4): the old shape consumed `cand`
+    // twice — a plain per-cfg count plus a separate truth-join count —
+    // recomputing the banded self-join (the scale-dominant term) end to
+    // end per consumer. `truth` is a distinct pair set, so a LEFT join
+    // preserves candidate multiplicity exactly: count(1) is the old
+    // n_candidates, count(t1) the old inner-join n_caught (0 for
+    // uncaught cfgs, matching the old left-join coalesce).
+    val cc = cand
+      .join(truth, $"d1" === $"t1" && $"d2" === $"t2", "left")
+      .groupBy($"cfg")
+      .agg(count(lit(1)).as("n_candidates"), count($"t1").as("n_caught"))
+    cc.crossJoin(broadcast(nTrue))
+      .select(
+        $"cfg", $"n_candidates",
+        $"n_true".cast("long").as("n_true"),
+        $"n_caught".cast("long").as("n_caught"),
+        round($"n_caught" * lit(1.0) /
+          greatest($"n_true", lit(1L)), 4).as("recall"),
+        round($"n_caught" * lit(1.0) /
+          greatest($"n_candidates", lit(1L)), 4).as("precision"))
+      .orderBy($"cfg")
   }
 
-  /** The band S-curve sweep with the production-scale truth-sampling
-    * knob as a REAL code path (the same hash-slice convention as
-    * [[lshRecallMeasured]]): `truthSamplePermille < 1000` restricts the
-    * whole measurement — signatures, banding candidates AND the exact
-    * Jaccard truth — to a deterministic per-row hash sample of
-    * documents, so the quadratic-ish truth side costs
-    * O((p·n)²-per-shingle-bucket) on the slice only while
-    * recall/precision stay unbiased estimates of the corpus S-curve
-    * (pairwise Jaccard depends on the two endpoints only; a pure
-    * per-row predicate keeps every sampled pair's score identical to
-    * its full-corpus value). Default 1000 = the full fixture-scale
-    * gate ([[qLshBandSweep]]); a 100 TB run reads the same table from
-    * a permille-sized slice. */
   /** First-matching-band emission predicate: true iff 0-based band
     * index `bj` is the FIRST position where the two carried band-hash
     * arrays agree — each agreeing pair survives at exactly one band.
@@ -945,47 +935,6 @@ object Dedup {
         Seq("cfg", "bj", "kh"))
       .filter($"d1" < $"d2" && firstMatchingBand($"ak1", $"ak2", $"bj"))
       .select($"cfg", $"d1", $"d2")
-  }
-
-  private[graft] def lshBandSweepMeasured(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      truthSamplePermille: Int = 1000): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    import graft.functions.TextFunctions._
-    val docs0 = Tables.documents(s, d)
-    val docs =
-      if (truthSamplePermille >= 1000) docs0
-      else docs0.filter(
-        CorpusOps.sampleHash(col("doc_id"), "tr") < truthSamplePermille)
-    val cand = lshSweepCandidates(docs)
-    val truth = ngramJaccardAllPairs(docs)
-      .filter(round($"jac", 4) >= 0.7)
-      .select($"d1".as("t1"), $"d2".as("t2"))
-      .localCheckpoint()
-    val nTrue = truth.agg(count(lit(1)).as("n_true"))
-    // ONE pass over the candidate stream for both per-cfg counts
-    // (r14 optimization, guide §2.4): the old shape consumed `cand`
-    // twice — a plain per-cfg count plus a separate truth-join count —
-    // recomputing the banded self-join (the scale-dominant term) end to
-    // end per consumer. `truth` is a distinct pair set, so a LEFT join
-    // preserves candidate multiplicity exactly: count(1) is the old
-    // n_candidates, count(t1) the old inner-join n_caught (0 for
-    // uncaught cfgs, matching the old left-join coalesce).
-    val cc = cand
-      .join(truth, $"d1" === $"t1" && $"d2" === $"t2", "left")
-      .groupBy($"cfg")
-      .agg(count(lit(1)).as("n_candidates"), count($"t1").as("n_caught"))
-    cc.crossJoin(broadcast(nTrue))
-      .select(
-        $"cfg", $"n_candidates",
-        $"n_true".cast("long").as("n_true"),
-        $"n_caught".cast("long").as("n_caught"),
-        round($"n_caught" * lit(1.0) /
-          greatest($"n_true", lit(1L)), 4).as("recall"),
-        round($"n_caught" * lit(1.0) /
-          greatest($"n_candidates", lit(1L)), 4).as("precision"))
-      .orderBy($"cfg")
   }
 
   /** Prefix-filter length for a `n`-shingle set at Jaccard 4/5 — exact

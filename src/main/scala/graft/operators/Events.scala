@@ -771,7 +771,7 @@ object Events {
         graft.functions.TextFunctions.stableHash60(concat(lit("u|"), $"user_id")).as("h"), $"user_id")
     val daily = ue
       .groupBy($"event_type", $"day")
-      .agg(graft.plans.KmvSketchAgg.kmvSketch($"h", RollK).as("sk"))
+      .agg(graft.plans.KmvAgg.kmvSketch($"h", RollK).as("sk"))
     val w = Window
       .partitionBy($"event_type")
       .orderBy($"day")

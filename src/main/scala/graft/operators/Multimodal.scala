@@ -360,10 +360,10 @@ object Multimodal {
     * mean threshold, and packed codes in one scan-side pass over the
     * UTF-8 bytes (constant bytecode at any dial — the HyperplaneBuckets
     * JIT lesson). This replaced the explode + groupBy(doc, seg) form
-    * (kept below as [[phashBandCodesExploded]] for the equivalence spec
-    * and the probe A/B), whose Θ(total chars) exchange was the measured
-    * x1000 scratch bound of the pHash probe family (SCALE.md r11
-    * residual #2). Empty text → all-zero code, same as before. */
+    * (kept below as [[phashBandCodesExploded]] for the equivalence
+    * spec), whose Θ(total chars) exchange was the measured x1000
+    * scratch bound of the pHash probe family (SCALE.md r11 residual
+    * #2). Empty text → all-zero code, same as before. */
   private[graft] def phashBandCodes(docs: org.apache.spark.sql.DataFrame,
       segs: Int, bands: Int): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
@@ -381,8 +381,7 @@ object Multimodal {
     * count-shuffle keyed (doc, segment), Θ(total chars) shuffle rows.
     * Retained as the equivalence baseline: MultimodalSpec pins its
     * codes bit-identical to the native expression's at both registry
-    * dials, and the scale probe measures the two forms' pixel stages
-    * against each other. Char at 1-based position j belongs to segment
+    * dials. Char at 1-based position j belongs to segment
     * (segs·j − 1) div n — verified identical to the oracle's range
     * slicing for every n. mean = (Σ ascii)/segs needs no spine: an
     * absent (doc, seg) row is a 0 pixel and 0 < mean always, so its
@@ -436,39 +435,6 @@ object Multimodal {
         .map(j => col(s"a$j") =!= col(s"c$j"))
         .foldLeft(lit(true))(_ && _)
     }.reduce(_ || _)
-
-  /** Banded candidate count at a (segs, bands) dial — the probe surface
-    * for the code-length analysis: one row (dial, n_docs, n_candidates).
-    * Candidates = distinct doc pairs agreeing on ≥ 1 band (exactly what
-    * the near-dup query feeds its Hamming verify), counted WITHOUT the
-    * verify so a probe measures the banding term alone. At a fixed
-    * 64-bit code the count grows ~n²/2¹⁶ once n ≫ 2¹⁶; at the 256-bit
-    * dial spurious band collisions are ~n²/2⁶⁴ ≈ 0 and the count tracks
-    * the corpus's true near-dup structure. */
-  private[graft] def phashCandidateCount(docs: org.apache.spark.sql.DataFrame,
-      segs: Int, bands: Int): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val codes = phashBandCodes(docs, segs, bands)
-    val bandCols = (0 until bands).map(b => col(s"b$b"))
-    val exploded = codes.select(
-      $"doc_id" +: bandCols :+
-        posexplode(array(bandCols: _*)).as(Seq("bi", "bv")): _*)
-    val left = exploded.toDF(
-      (("d1" +: (0 until bands).map(b => s"a$b")) ++ Seq("bi", "bv")): _*)
-    val right = exploded.toDF(
-      (("d2" +: (0 until bands).map(b => s"c$b")) ++ Seq("bi", "bv")): _*)
-    val n = codes.count()
-    // first-matching-band emission (see [[firstMatchingBand]]): the
-    // count is a filter + partial agg over the join output — no distinct,
-    // so the data-quadratic candidate stream is never exchanged (the
-    // prior distinct's shuffle write was the measured x1000 ENOSPC)
-    left.join(right, Seq("bi", "bv"))
-      .filter($"d1" < $"d2" && firstMatchingBand(bands))
-      .agg(count(lit(1)).as("n_candidates"))
-      .select(lit(s"${segs}bit/${bands}bands").as("dial"),
-        lit(n).as("n_docs"), $"n_candidates")
-  }
 
   /** The fixture dial: 64-bit code, 4×16-bit bands, radius 10. */
   val qMediaPhashNearDup: QueryDef =

@@ -40,10 +40,9 @@ object Similarity {
     cosineKnnPairs(Tables.embeddings(s, d)).orderBy($"qid", $"rnk")
   }
 
-  /** Brute-force cosine top-10 (qid, nid, cos_sim, rnk) over an arbitrary
-    * embeddings slice — the ground-truth side of [[qAnnRecall]],
-    * DataFrame-parameterized so the measurement can run on a hash-sampled
-    * slice at corpus scale ([[annRecallMeasured]]). */
+  /** Brute-force cosine top-10 (qid, nid, cos_sim, rnk) over an
+    * embeddings frame — [[qCosineKnn]] and the ground-truth side of
+    * [[qAnnRecall]]. */
   private[graft] def cosineKnnPairs(
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = emb.sparkSession
@@ -157,18 +156,6 @@ object Similarity {
     Array.fill(nBits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Random-hyperplane LSH bucket id for an embedding column. */
-  private[graft] def lshBucket(v: org.apache.spark.sql.Column, nBits: Int,
-      dim: Int): org.apache.spark.sql.Column = {
-    val hp = hyperplanes(nBits, dim)
-    (0 until nBits)
-      .map { j =>
-        val h = array(hp(j).map(lit): _*)
-        when(dot(v, h) > 0.0, lit(1L << j)).otherwise(lit(0L))
-      }
-      .reduce(_ + _)
-  }
-
   /** Multi-table LSH bucket ids: `nTables` independent signatures of
     * `bitsPerTable` random-hyperplane bits each. A pair is a candidate if
     * it collides in ANY table — the standard recall/cost dial (more
@@ -178,7 +165,7 @@ object Similarity {
     // ONE native expression for all nTables·bits planes. The previous
     // composed form (array of per-bit when(dot > 0) trees) unrolled
     // every plane into the codegen method: harmless at the registry's
-    // 4×4 dial, but at the probe's production dial (12×16 = 192 planes)
+    // 4×4 dial, but at a large-corpus layout (12×16 = 192 planes)
     // the generated method blew HotSpot's huge-method JIT limit and the
     // bucketing scan ran as interpreted bytecode — 370+ s of CPU per
     // task at the x1000 corpus (see HyperplaneBuckets' scaladoc). Same
@@ -318,9 +305,8 @@ object Similarity {
     annIvfPairs(Tables.embeddings(s, d)).orderBy($"qid", $"rnk")
   }
 
-  /** IVF top-10 (qid, nid, cos_sim, rnk) over an arbitrary embeddings
-    * slice — DataFrame-parameterized twin of [[qAnnIvf]] (see
-    * [[annRecallMeasured]]). */
+  /** IVF top-10 (qid, nid, cos_sim, rnk) over an embeddings frame —
+    * [[qAnnIvf]] and the path under test in [[qAnnRecall]]. */
   private[graft] def annIvfPairs(
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = emb.sparkSession
@@ -390,29 +376,23 @@ object Similarity {
        |FROM scored WHERE round(c, 4) > 0.45
        |ORDER BY v1, v2""".stripMargin
   ) { (s, d) =>
-    embedNearDupLshMeasured(s, d)
+    embedNearDupLshPairs(s, d)
   }
 
-  /** The LSH near-dup pair path with the PRODUCTION bucket dial exposed:
-    * the pinned registry layout (12 tables × 6 bits = 64 buckets, what
-    * [[qEmbedNearDupLsh]]'s oracle inlines) is the `bitsPerTable = 6`
-    * default, but candidate cost is Σ|bucket|²/2 per table, so a corpus
-    * n× the fixture needs `bitsPerTable ≈ 6 + log₂ n` to hold mean
-    * bucket size — and with it per-row join work — CONSTANT. SCALE.md
-    * finding 2 documented that dial; this parameter makes it a real
-    * code path, while `SimilaritySpec` pins that the default reproduces
-    * the oracle-gated registry query exactly. */
-  private[graft] def embedNearDupLshMeasured(
+  /** The LSH near-dup pair path of [[qEmbedNearDupLsh]], which
+    * [[qEmbedDedupGroups]] also runs: 12 tables × 6 bits = 64 buckets,
+    * the layout both oracles inline. Candidate cost is Σ|bucket|²/2 per
+    * table, so a corpus n× the fixture needs `bitsPerTable ≈ 6 + log₂ n`
+    * to hold mean bucket size — and with it per-row join work — constant
+    * (SCALE.md finding 2). */
+  private def embedNearDupLshPairs(
       s: org.apache.spark.sql.SparkSession,
-      d: String,
-      nTables: Int = 12,
-      bitsPerTable: Int = 6): org.apache.spark.sql.DataFrame = {
+      d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val dim = 64
     val bucketed = Tables.embeddings(s, d).select(
       $"vec_id",
       $"embedding",
-      posexplode(lshBuckets($"embedding", nTables, bitsPerTable, dim))
+      posexplode(lshBuckets($"embedding", 12, 6, 64))
         .as(Seq("tbl", "bucket")))
     val a = bucketed.select($"vec_id".as("v1"), $"embedding".as("e1"),
       norm($"embedding").as("n1"), $"tbl", $"bucket")
@@ -636,32 +616,13 @@ object Similarity {
       |GROUP BY b.qid
       |ORDER BY b.qid""".stripMargin
   ) { (s, d) =>
-    annRecallMeasured(s, d)
-  }
-
-  /** The ANN recall measurement, with the production-scale truth-sampling
-    * knob as a REAL code path: `corpusSamplePermille < 1000` restricts
-    * both sides (brute-force truth and the IVF path under test) to a
-    * deterministic hash sample of the corpus plus the query vectors —
-    * index quality evaluated on a held-out slice, the composition a
-    * 100 TB deployment runs continuously (corpus-wide brute force being
-    * off the table there). Default 1000 = the full fixture-scale gate
-    * ([[qAnnRecall]]). */
-  private[graft] def annRecallMeasured(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      corpusSamplePermille: Int = 1000): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val emb0 = Tables.embeddings(s, d)
-    val emb =
-      if (corpusSamplePermille >= 1000) emb0
-      else emb0.filter($"vec_id" < 3 ||
-        CorpusOps.sampleHash($"vec_id", "ar") < corpusSamplePermille)
+    val emb = Tables.embeddings(s, d)
     val brute = cosineKnnPairs(emb).select($"qid", $"nid")
     val ivf = annIvfPairs(emb)
       .select($"qid".as("iqid"), $"nid".as("inid"))
     // denominator = the per-query TRUTH size (≤ 10), not a literal 10:
-    // on a slice with fewer than 10 non-query vectors the truncated
+    // on a corpus with fewer than 10 non-query vectors the truncated
     // recall@k definition keeps a perfect result at 1.0 instead of
     // capping at |truth|/10
     brute
@@ -719,21 +680,8 @@ object Similarity {
        |FROM grp
        |ORDER BY vec_id""".stripMargin
   ) { (s, d) =>
-    embedDedupGroupsMeasured(s, d)
-  }
-
-  /** [[qEmbedDedupGroups]] with the bucket dial of
-    * [[embedNearDupLshMeasured]] threaded through — the form a corpus
-    * n× the fixture actually runs (`bitsPerTable ≈ 6 + log₂ n` keeps the
-    * candidate join linear; the pinned 6-bit registry layout is the
-    * fixture-scale default and stays byte-identical to the oracle). */
-  private[graft] def embedDedupGroupsMeasured(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      nTables: Int = 12,
-      bitsPerTable: Int = 6): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val pairs = embedNearDupLshMeasured(s, d, nTables, bitsPerTable)
+    val pairs = embedNearDupLshPairs(s, d)
       .select($"v1".as("d1"), $"v2".as("d2"))
     val labels = Dedup.connectedComponents(pairs)
       .withColumnRenamed("node", "lnode")

@@ -1609,6 +1609,43 @@ object TextOps {
     * parameterizes them. */
   private[graft] val Bm25Terms = Seq("hash", "join", "stream")
 
+  /** BM25 (k1 = 1.2, b = 0.75) over a documents frame: each document's
+    * terms `tok` (doc_id, term) and length `dl` (doc_id, dl), and the
+    * scoring relation of any postings. */
+  private final class Bm25(docs: org.apache.spark.sql.DataFrame) {
+    import docs.sparkSession.implicits._
+    private val t = docs.select($"doc_id", words($"text").as("w"))
+    val dl = t.select($"doc_id", size($"w").cast("double").as("dl"))
+    private val st = dl.agg(count(lit(1)).cast("double").as("n"),
+      avg($"dl").as("avgdl"))
+    val tok = t.select($"doc_id", explode($"w").as("term"))
+
+    /** Term frequencies (doc_id, term, tf) of the [[Bm25Terms]] query. */
+    def queryTf: org.apache.spark.sql.DataFrame = tok
+      .filter($"term".isin(Bm25Terms: _*))
+      .groupBy($"doc_id", $"term")
+      .agg(count(lit(1)).cast("double").as("tf"))
+
+    /** Postings `tf` (doc_id, term, tf, ...) joined with each term's
+      * document frequency, the document length and the corpus size N
+      * and mean length avgdl — the rows [[score]] reads. The df and
+      * corpus rows are broadcast; the length join ships two longs per
+      * document. */
+    def scored(
+        tf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val dfr = tf.groupBy($"term").agg(count(lit(1)).cast("double").as("df"))
+      tf.join(broadcast(dfr), "term")
+        .join(dl, "doc_id")
+        .crossJoin(broadcast(st))
+    }
+
+    /** One term's score on a [[scored]] row:
+      * ln(1+(N−df+0.5)/(df+0.5)) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)). */
+    val score: org.apache.spark.sql.Column =
+      log(lit(1) + ($"n" - $"df" + 0.5) / ($"df" + 0.5)) * $"tf" * 2.2 /
+        ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl"))
+  }
+
   /** BM25 ranked retrieval (Robertson–Spärck Jones; k1=1.2, b=0.75) —
     * the lexical search baseline a curation pipeline runs for targeted
     * corpus pulls (and the rerank partner to the ANN queries): top-10
@@ -1653,24 +1690,9 @@ object TextOps {
       |WHERE rank <= 10 ORDER BY rank""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val t = Tables.documents(s, d).select($"doc_id", words($"text").as("w"))
-    val dl = t.select($"doc_id", size($"w").cast("double").as("dl"))
-    val st = dl.agg(count(lit(1)).cast("double").as("n"), avg($"dl").as("avgdl"))
-    val tf = t
-      .select($"doc_id", explode($"w").as("term"))
-      .filter($"term".isin(Bm25Terms: _*))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dfr = tf.groupBy($"term").agg(count(lit(1)).cast("double").as("df"))
-    val sc = tf
-      .join(broadcast(dfr), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(st))
-      .select($"doc_id",
-        (log(lit(1) + ($"n" - $"df" + 0.5) / ($"df" + 0.5))
-          * $"tf" * 2.2
-          / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-          .as("s"))
+    val bm = new Bm25(Tables.documents(s, d))
+    val sc = bm.scored(bm.queryTf)
+      .select($"doc_id", bm.score.as("s"))
       .groupBy($"doc_id")
       .agg(round(sum($"s"), 4).as("bm25"),
         count(lit(1)).cast("long").as("n_terms"))
@@ -1745,25 +1767,9 @@ object TextOps {
     import s.implicits._
     import graft.functions.VectorFunctions.{dot, norm}
     // lexical leg: BM25 over the query terms (scan-filtered postings)
-    val t = Tables.documents(s, d).select($"doc_id", words($"text").as("w"))
-    val dl = t.select($"doc_id", size($"w").cast("double").as("dl"))
-    val st = dl.agg(count(lit(1)).cast("double").as("n"),
-      avg($"dl").as("avgdl"))
-    val tf = t
-      .select($"doc_id", explode($"w").as("term"))
-      .filter($"term".isin(Bm25Terms: _*))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dfr = tf.groupBy($"term").agg(count(lit(1)).cast("double").as("df"))
-    val sc = tf
-      .join(broadcast(dfr), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(st))
-      .select($"doc_id",
-        (log(lit(1) + ($"n" - $"df" + 0.5) / ($"df" + 0.5))
-          * $"tf" * 2.2
-          / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-          .as("s"))
+    val bm = new Bm25(Tables.documents(s, d))
+    val sc = bm.scored(bm.queryTf)
+      .select($"doc_id", bm.score.as("s"))
       .groupBy($"doc_id")
       .agg(round(sum($"s"), 4).as("s"))
     val lexTop = sc.orderBy($"s".desc, $"doc_id").limit(20)
@@ -1867,26 +1873,11 @@ object TextOps {
       |FROM gains CROSS JOIN idcg ORDER BY rank""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val t = Tables.documents(s, d).select($"doc_id", words($"text").as("w"))
-    val dl = t.select($"doc_id", size($"w").cast("double").as("dl"))
-    val st = dl.agg(count(lit(1)).cast("double").as("n"),
-      avg($"dl").as("avgdl"))
-    val tf = t
-      .select($"doc_id", explode($"w").as("term"))
-      .filter($"term".isin(Bm25Terms: _*))
-      .groupBy($"doc_id", $"term")
-      .agg(count(lit(1)).cast("double").as("tf"))
+    val bm = new Bm25(Tables.documents(s, d))
+    val tf = bm.queryTf
     val rel = tf.groupBy($"doc_id").agg(count(lit(1)).as("rel"))
-    val dfr = tf.groupBy($"term").agg(count(lit(1)).cast("double").as("df"))
-    val sc = tf
-      .join(broadcast(dfr), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(st))
-      .select($"doc_id",
-        (log(lit(1) + ($"n" - $"df" + 0.5) / ($"df" + 0.5))
-          * $"tf" * 2.2
-          / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")))
-          .as("s"))
+    val sc = bm.scored(tf)
+      .select($"doc_id", bm.score.as("s"))
       .groupBy($"doc_id")
       .agg(round(sum($"s"), 4).as("s"))
     val rankedTop = sc.join(rel, "doc_id")
@@ -2174,30 +2165,16 @@ object TextOps {
       |QUALIFY rank <= 10 ORDER BY rank""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val t = Tables.documents(s, d).select($"doc_id", words($"text").as("w"))
-    val dl = t.select($"doc_id", size($"w").cast("double").as("dl"))
-    val st = dl.agg(count(lit(1)).cast("double").as("n"),
-      avg($"dl").as("avgdl"))
-    val tok = t.select($"doc_id", explode($"w").as("term"))
+    val bm = new Bm25(Tables.documents(s, d))
+    val (tok, dl) = (bm.tok, bm.dl)
     def bm25(tf: org.apache.spark.sql.DataFrame,
-        weighted: Boolean): org.apache.spark.sql.DataFrame = {
-      val dfr = tf.groupBy($"term").agg(count(lit(1)).cast("double").as("df"))
-      val base = tf
-        .join(broadcast(dfr), "term")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
-      val contrib = log(lit(1) + ($"n" - $"df" + 0.5) / ($"df" + 0.5)) *
-        $"tf" * 2.2 /
-        ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl"))
-      base
+        weighted: Boolean): org.apache.spark.sql.DataFrame =
+      bm.scored(tf)
         .select($"doc_id",
-          (if (weighted) $"wq" * contrib else contrib).as("c"))
+          (if (weighted) $"wq" * bm.score else bm.score).as("c"))
         .groupBy($"doc_id")
         .agg(round(sum($"c"), 4).as("s"))
-    }
-    val tf1 = tok.filter($"term".isin(Bm25Terms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).cast("double").as("tf"))
-    val top1 = bm25(tf1, weighted = false)
+    val top1 = bm25(bm.queryTf, weighted = false)
       .orderBy($"s".desc, $"doc_id").limit(10)
       .select($"doc_id")
       .localCheckpoint() // 10 rows; feeds the vote + the stage-1 flag

@@ -82,7 +82,7 @@ object GraftExtensions {
     },
     "kmv_sketch" -> { args =>
       require(args.length == 2, "kmv_sketch expects (col, k)")
-      KmvSketchAgg(args(0), intLit(args(1), "kmv_sketch k"))
+      KmvAgg.sketchAgg(args(0), intLit(args(1), "kmv_sketch k"))
         .toAggregateExpression()
     },
     "cov_moments" -> { args =>

@@ -64,24 +64,10 @@ case class KmvAgg(
     if (buf.size < k) buf.size.toLong
     else math.floor((k - 1).toDouble * (KmvAgg.M / buf.kth.toDouble)).toLong
 
-  override def serialize(buf: KmvAgg.Buffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    var i = 0
-    while (i < buf.size) { out.writeLong(buf.values(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: KmvAgg.Buffer): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): KmvAgg.Buffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new KmvAgg.Buffer(k)
-    var i = 0
-    while (i < n) { buf.add(in.readLong()); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): KmvAgg.Buffer =
+    KmvAgg.Buffer.fromBytes(k, bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): KmvAgg =
     copy(mutableAggBufferOffset = offset)
@@ -124,10 +110,58 @@ object KmvAgg {
       var i = 0
       while (i < other.size) { add(other.values(i)); i += 1 }
     }
+
+    /** Wire form of a partial buffer: the size, then the sorted values. */
+    private[plans] def toBytes: Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val out = new DataOutputStream(bos)
+      out.writeInt(size)
+      var i = 0
+      while (i < size) { out.writeLong(values(i)); i += 1 }
+      out.flush()
+      bos.toByteArray
+    }
+  }
+
+  object Buffer {
+    private[plans] def fromBytes(k: Int, bytes: Array[Byte]): Buffer = {
+      val in = new DataInputStream(new ByteArrayInputStream(bytes))
+      val n = in.readInt()
+      val buf = new Buffer(k)
+      var i = 0
+      while (i < n) { buf.add(in.readLong()); i += 1 }
+      buf
+    }
   }
 
   /** Column API: `kmvDistinct(stableHash60($"x"), 256)` → BIGINT estimate. */
   def kmvDistinct(c: Column, k: Int): Column =
     ColumnBridge.column(
       KmvAgg(ColumnBridge.expression(c), k).toAggregateExpression())
+
+  /** The k-minimum-values SKETCH itself: the sorted k smallest distinct
+    * 60-bit hashes behind [[KmvAgg]]'s scalar estimate, exposed so set
+    * operations run on sketches instead of corpora — two sources'
+    * Jaccard similarity, union/intersection cardinalities, containment,
+    * each from two k-long arrays (Beyer et al. 2007, "On synopses for
+    * distinct-value estimation under multiset operations", SIGMOD).
+    *
+    * At 100 TB this is the difference between an audit that shuffles
+    * every distinct shingle per source pair (the exact
+    * [[graft.operators.CorpusOps.sourceOverlap]] path) and one that ships
+    * ≤ k longs per source per partial buffer. The array is exactly
+    * [[SmallestKAgg]]'s, so the sketch is that aggregate with the
+    * estimator's k ≥ 2 floor; the DuckDB oracle writes it as
+    * `(list_sort(list(DISTINCT h)))[:k]`.
+    *
+    * Column API: `kmvSketch(stableHash60($"x"), 128)` → sorted BIGINT[]. */
+  def kmvSketch(c: Column, k: Int): Column =
+    ColumnBridge.column(
+      sketchAgg(ColumnBridge.expression(c), k).toAggregateExpression())
+
+  /** The sketch aggregate behind `kmvSketch` and SQL `kmv_sketch`. */
+  private[plans] def sketchAgg(child: Expression, k: Int): SmallestKAgg = {
+    require(k >= 2, "k must be at least 2")
+    SmallestKAgg(child, k)
+  }
 }

@@ -8,8 +8,6 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 /** The k smallest DISTINCT longs in a group, as a sorted array — the
   * bounded-exchange form of `distinct() + row_number() OVER (PARTITION
   * BY g ORDER BY v) <= k`.
@@ -57,24 +55,10 @@ case class SmallestKAgg(
   override def eval(buf: KmvAgg.Buffer): Any =
     new GenericArrayData(java.util.Arrays.copyOf(buf.values, buf.size))
 
-  override def serialize(buf: KmvAgg.Buffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    var i = 0
-    while (i < buf.size) { out.writeLong(buf.values(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: KmvAgg.Buffer): Array[Byte] = buf.toBytes
 
-  override def deserialize(bytes: Array[Byte]): KmvAgg.Buffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new KmvAgg.Buffer(k)
-    var i = 0
-    while (i < n) { buf.add(in.readLong()); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): KmvAgg.Buffer =
+    KmvAgg.Buffer.fromBytes(k, bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): SmallestKAgg =
     copy(mutableAggBufferOffset = offset)

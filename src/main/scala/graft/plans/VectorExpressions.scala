@@ -285,7 +285,7 @@ case class PqAdcSum(left: Expression, right: Expression)
   * Why it exists (r10): the composed form — `array(...)` over
   * nTables·bits `when(dot > 0, 1<<j)` trees — UNROLLS every plane into
   * the whole-stage-codegen method body. At the registry's 4×4 that is
-  * 16 inline loops (fine); at the probe's production dial (12 tables ×
+  * 16 inline loops (fine); at a large-corpus layout (12 tables ×
   * 16 bits = 192 planes) the generated doConsume exceeds HotSpot's
   * huge-method JIT limit and the stage silently executes as INTERPRETED
   * BYTECODE — the r10 x1000 probe measured the bucketing scan burning

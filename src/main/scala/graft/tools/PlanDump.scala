@@ -1,12 +1,10 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ExplainMode
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Dev tool: dump `explain("formatted")` for registered queries and,
   * optionally, execute each via the noop sink while counting jobs/stages
@@ -30,31 +28,19 @@ object PlanDump {
     val spark = GraftSession.tunedBuilder(cpus.toInt, "graft-plandump")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-    })
     names.foreach { name =>
       val sb = new StringBuilder
       // count jobs/stages from CONSTRUCTION on: iterative queries run
       // eager work (localCheckpoint rounds, convergence counts) inside
       // fn() itself, before any sink — the bench pays for those too
-      jobs.set(0); stages.set(0)
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val tBuilt = System.nanoTime()
-      val jBuilt = jobs.get
-      if (run) df.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val dtBuild = (tBuilt - t0) / 1e9
-      if (run) Thread.sleep(300) // listener bus drain
+      val ((df, dtBuild), built) = JobCounter.count(spark.sparkContext)(
+        timed(SparkEntry.queries(name)(spark, sfDir)))
+      val ((_, dtRun), ran) = JobCounter.count(spark.sparkContext)(
+        timed(if (run) df.write.format("noop").mode("overwrite").save()))
+      val dt = dtBuild + dtRun
       sb ++= df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       if (run) {
-        sb ++= f"%n== Executed (noop sink) ==%njobs=${jobs.get} stages=${stages.get} wall=$dt%.3f s buildjobs=$jBuilt buildwall=$dtBuild%.3f s%n"
+        sb ++= f"%n== Executed (noop sink) ==%njobs=${built.jobs + ran.jobs} stages=${built.stages + ran.stages} wall=$dt%.3f s buildjobs=${built.jobs} buildwall=$dtBuild%.3f s%n"
         sb ++= df.queryExecution.executedPlan.toString
       }
       Files.write(outDir.resolve(s"$name.txt"),
@@ -62,5 +48,12 @@ object PlanDump {
       println(s"[plandump] $name -> ${outDir.resolve(s"$name.txt")}")
     }
     spark.stop()
+  }
+
+  /** `f`'s result and its wall seconds. */
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -449,12 +449,6 @@ class CandidateStreamSpec extends SparkSpec {
       graft.operators.Multimodal.phashPairs(docs, 256, 4, 16), "phashPairs 256/4")
   }
 
-  test("pHash candidate count probe surface: filter + partial agg, no distinct") {
-    assertStreamedNotExchanged(
-      graft.operators.Multimodal.phashCandidateCount(docs, 64, 4),
-      "phashCandidateCount")
-  }
-
   test("sampled prefix-filter cap: bounded-partial-state aggregate, not a window") {
     // The samp stage of qPrefixFilterSampled, reconstructed as in
     // DedupSpec's window-equivalence test: the SmallestKAgg partial

@@ -52,63 +52,6 @@ class DedupSpec extends SparkSpec {
     assert(survivorMaxDf <= cap)
   }
 
-  test("LSH recall measurement runs on a hash-sampled slice (production path)") {
-    import graft.operators.CorpusOps
-    val permille = 500
-    val sampled = Dedup.lshRecallMeasured(spark, sf, permille).head()
-    // pairwise Jaccard doesn't depend on other documents, so the sampled
-    // slice's truth must equal the FULL truth restricted to pairs with
-    // both endpoints in the slice — the sampling changes cost, not
-    // semantics (the df cap provably no-ops at this scale)
-    val sliceIds = Tables.documents(spark, sf)
-      .filter(CorpusOps.sampleHash($"doc_id", "tr") < permille)
-      .select($"doc_id").as[Long].collect().toSet
-    val fullTruthInSlice = Dedup.qNgramJaccard.fn(spark, sf)
-      .select($"d1", $"d2").as[(Long, Long)].collect()
-      .count { case (a, b) => sliceIds.contains(a) && sliceIds.contains(b) }
-    assert(sampled.getAs[Long]("n_truth") === fullTruthInSlice)
-    val recall = sampled.getAs[Double]("pair_recall")
-    val precision = sampled.getAs[Double]("pair_precision")
-    assert(recall >= 0.0 && recall <= 1.0)
-    assert(precision >= 0.0 && precision <= 1.0)
-    assert(sliceIds.size < Tables.documents(spark, sf).count())
-  }
-
-  test("band sweep runs on a hash-sampled slice (production path)") {
-    import graft.operators.CorpusOps
-    val permille = 500
-    val sampled = Dedup.lshBandSweepMeasured(spark, sf, permille).collect()
-    // all four layouts present, each internally consistent
-    assert(sampled.map(_.getAs[String]("cfg")).toSet ===
-      Set("16x1", "8x2", "4x4", "2x8"))
-    // the slice's truth equals the FULL truth restricted to pairs with
-    // both endpoints in the slice — the per-row hash predicate changes
-    // cost, not pair semantics
-    val sliceIds = Tables.documents(spark, sf)
-      .filter(CorpusOps.sampleHash($"doc_id", "tr") < permille)
-      .select($"doc_id").as[Long].collect().toSet
-    val fullTruthInSlice = Dedup
-      .ngramJaccardAllPairs(Tables.documents(spark, sf))
-      .filter(round($"jac", 4) >= 0.7)
-      .select($"d1", $"d2").as[(Long, Long)].collect()
-      .count { case (a, b) => sliceIds.contains(a) && sliceIds.contains(b) }
-    sampled.foreach { r =>
-      assert(r.getAs[Long]("n_true") === fullTruthInSlice)
-      assert(r.getAs[Long]("n_caught") <= r.getAs[Long]("n_true"))
-      assert(r.getAs[Long]("n_caught") <= r.getAs[Long]("n_candidates"))
-      val rec = r.getAs[Double]("recall")
-      assert(rec >= 0.0 && rec <= 1.0)
-    }
-    // 16 narrow bands can only catch MORE truth pairs than 2 wide bands
-    // (nested-layout monotonicity holds on any slice)
-    def caught(cfg: String) =
-      sampled.find(_.getAs[String]("cfg") == cfg).get.getAs[Long]("n_caught")
-    assert(caught("16x1") >= caught("8x2"))
-    assert(caught("8x2") >= caught("4x4"))
-    assert(caught("4x4") >= caught("2x8"))
-    assert(sliceIds.size < Tables.documents(spark, sf).count())
-  }
-
   test("ngram novelty matches a plain-Scala first-owner computation") {
     import spark.implicits._
     val all = Tables.documents(spark, sf)

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Curation, GraphOps, Linkage, Similarity}
 import graft.plans.JaroWinkler
-import graft.plans.KmvSketchAgg.kmvSketch
+import graft.plans.KmvAgg.kmvSketch
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,6 +70,17 @@ class LinkageGraphSpec extends SparkSpec {
     val many = data.toDF("h").repartition(13).agg(kmvSketch($"h", 64)).head().getSeq[Long](0)
     assert(one === many)
     assert(one === data.distinct.sorted.take(64))
+  }
+
+  test("kmv_sketch rejects k < 2 through both the Column and the SQL API") {
+    val df = Seq(5L, 3L).toDF("h")
+    val col = intercept[IllegalArgumentException](df.agg(kmvSketch($"h", 1)))
+    assert(col.getMessage.contains("k must be at least 2"))
+    df.createOrReplaceTempView("kmv_k1")
+    val sql = intercept[Exception](spark.sql("SELECT kmv_sketch(h, 1) FROM kmv_k1"))
+    assert(Iterator.iterate[Throwable](sql)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("k must be at least 2")),
+      sql.toString)
   }
 
   private def stableHashLong(s: String): Long = {

@@ -181,9 +181,9 @@ class MultimodalSpec extends SparkSpec {
         .filter(col("d1") < col("d2"))
         .select(col("d1"), col("d2")).distinct()
       val nRef = refPairs.count()
-      // the production count (first-band emission, no distinct)
-      val nNew = Multimodal.phashCandidateCount(docs, segs, bands)
-        .select(col("n_candidates")).head.getLong(0)
+      // the production emission (first matching band, no distinct); a
+      // radius equal to the code length admits every candidate pair
+      val nNew = Multimodal.phashPairs(docs, segs, bands, segs).count()
       assert(nNew === nRef, s"dial ${segs}bit/${bands}bands")
       assert(nRef >= clones.count(), "clone pairs must collide")
       // and the full query emits each qualifying pair exactly once

@@ -350,7 +350,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("kmv source-jaccard aggregates partially before its one exchange") {
-    // KmvSketchAgg is a TypedImperativeAggregate: partial buffers must
+    // the kmv sketch is a TypedImperativeAggregate: partial buffers must
     // combine map-side (ObjectHashAggregate partial + final), shipping
     // <= k longs per partial — the whole point of the sketch
     val p = finalPlan(plan(q("q_kmv_source_jaccard")))

@@ -166,6 +166,17 @@ class Round7OpsSpec extends SparkSpec {
       assert(rows(wide)._2 >= rows(narrow)._2 - 1e-9,
         s"$wide recall must dominate $narrow")
     }
+    // every layout reads the one exact truth, and catches no more pairs
+    // than it has candidates or true pairs
+    val nTrue = graft.operators.Dedup
+      .ngramJaccardAllPairs(Tables.documents(spark, sf))
+      .filter(round($"jac", 4) >= 0.7).count()
+    graft.operators.Dedup.qLshBandSweep.fn(spark, sf)
+      .select($"n_candidates", $"n_true", $"n_caught").as[(Long, Long, Long)]
+      .collect().foreach { case (cand, truth, caught) =>
+        assert(truth === nTrue)
+        assert(caught <= truth && caught <= cand)
+      }
   }
 
   test("rolling distinct: KMV union estimate tracks the exact WAU") {

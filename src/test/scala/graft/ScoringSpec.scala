@@ -222,6 +222,8 @@ class ScoringSpec extends SparkSpec {
         .as[(Long, Long, Long, Double, Double)]
         .collect()
     assert(hit <= truth && hit <= cand, "hits bounded by both sets")
+    assert(truth === graft.operators.Dedup.qNgramJaccard.fn(spark, sf).count(),
+      "the truth side is the exact Jaccard pair set")
     assert(recall >= 0.0 && recall <= 1.0)
     assert(precision >= 0.0 && precision <= 1.0)
     // 16 permutations / 4×4 banding must surface most 0.8-Jaccard pairs

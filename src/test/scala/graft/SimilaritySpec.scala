@@ -152,26 +152,13 @@ class SimilaritySpec extends SparkSpec {
       s"hash sample of $n ids kept $kept rows; target $K")
   }
 
-  test("ANN recall measurement runs on a hash-sampled slice (production path)") {
-    val full = Similarity.annRecallMeasured(spark, sf)
+  test("ANN recall measurement: one row per query vector, recall in [0, 1]") {
+    val rows = Similarity.qAnnRecall.fn(spark, sf)
       .as[(Long, Long, Double)].collect()
-    val sampled = Similarity.annRecallMeasured(spark, sf, 300)
-      .as[(Long, Long, Double)].collect()
-    // one row per query vector either way; recall well-defined in [0,1]
-    assert(sampled.length === full.length)
-    sampled.foreach { case (_, hits, r) =>
+    assert(rows.map(_._1).sorted.toSeq === Seq(0L, 1L, 2L))
+    rows.foreach { case (_, hits, r) =>
       assert(hits >= 0 && hits <= 10 && r >= 0.0 && r <= 1.0)
     }
-    // the sampled slice is a subset: brute-force truth over fewer
-    // competitors can only make the IVF path look BETTER or equal on
-    // average is NOT guaranteed per-query, so assert only validity + the
-    // slice really shrank the corpus side
-    val nFull = Tables.embeddings(spark, sf).count()
-    val nSliced = Tables.embeddings(spark, sf)
-      .filter($"vec_id" < 3 ||
-        operators.CorpusOps.sampleHash($"vec_id", "ar") < 300)
-      .count()
-    assert(nSliced < nFull)
   }
 
   test("embed outlier report: conservation, bounds, and p10 semantics") {
@@ -298,13 +285,10 @@ class SimilaritySpec extends SparkSpec {
     assert(got.toSet === again.toSet)
   }
 
-  test("near-dup bucket dial: exact precision at every bits setting, " +
-      "default = registry query") {
-    // the production dial (bits ∝ log₂ corpus, SCALE.md finding 2): more
-    // bits shrink buckets — and candidate-join cost — but every emitted
-    // pair is still exact-verified, so precision stays 1.0 at ANY
-    // setting; only recall trades off. Truth = all-pairs cosine at the
-    // same rounded threshold, accumulated in index order like the
+  test("LSH near-dup pairs: exact precision; dedup groups keep each pair together") {
+    // every emitted pair is exact-verified, so precision is 1.0 whatever
+    // the bucket layout; only recall trades off. Truth = all-pairs cosine
+    // at the same rounded threshold, accumulated in index order like the
     // engine's dot.
     val emb = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding").as[(Long, Array[Float])]
@@ -322,26 +306,16 @@ class SimilaritySpec extends SparkSpec {
       if BigDecimal(cos(emb(i)._2, emb(j)._2))
         .setScale(4, BigDecimal.RoundingMode.HALF_UP) > 0.45
     } yield (emb(i)._1, emb(j)._1)).toSet
-    for (bits <- Seq(4, 6, 10)) {
-      val pairs = Similarity.embedNearDupLshMeasured(spark, sf, 12, bits)
-        .select($"v1", $"v2").as[(Long, Long)].collect().toSet
-      assert((pairs -- truth).isEmpty,
-        s"bits=$bits emitted a pair the exact truth rejects")
-      info(s"bits=$bits |pairs|=${pairs.size} |truth|=${truth.size}")
-    }
-    // the default dial IS the oracle-gated registry query
-    val dflt = Similarity.embedNearDupLshMeasured(spark, sf)
-      .select($"v1", $"v2").as[(Long, Long)].collect().toSet
-    val reg = Similarity.qEmbedNearDupLsh.fn(spark, sf)
-      .select($"v1", $"v2").as[(Long, Long)].collect().toSet
-    assert(dflt === reg)
-    // and the grouped composition stays consistent off the default dial:
-    // both endpoints of every emitted pair share a group label
-    val g = Similarity.embedDedupGroupsMeasured(spark, sf, 12, 8)
-      .select($"vec_id", $"group_id").as[(Long, Long)].collect().toMap
-    val p8 = Similarity.embedNearDupLshMeasured(spark, sf, 12, 8)
+    val pairs = Similarity.qEmbedNearDupLsh.fn(spark, sf)
       .select($"v1", $"v2").as[(Long, Long)].collect()
-    p8.foreach { case (a, b) =>
+    assert((pairs.toSet -- truth).isEmpty,
+      "emitted a pair the exact truth rejects")
+    info(s"|pairs|=${pairs.length} |truth|=${truth.size}")
+    // the grouped composition: both endpoints of every emitted pair
+    // share a group label
+    val g = Similarity.qEmbedDedupGroups.fn(spark, sf)
+      .select($"vec_id", $"group_id").as[(Long, Long)].collect().toMap
+    pairs.foreach { case (a, b) =>
       assert(g(a) === g(b), s"pair ($a,$b) split across groups")
     }
   }
