@@ -10,9 +10,13 @@
 # on odd ones, for BENCHMARK.json's run_seconds. Each run's JSON goes to
 # OUT (default a fresh /tmp dir). The summary gives, for every end-to-end
 # metric of BENCHMARK.json: the median and quartiles of each side, the
-# pairs the change won, and whether the change clears the gain rule
-# (wins at least 9 in 10 pairs and its median beats the parent's by more
-# than the parent's interquartile range).
+# pairs the change won, whether the change clears the gain rule (wins at
+# least 9 in 10 pairs and its median beats the parent's by more than the
+# parent's interquartile range), and whether it regresses past the
+# metric's bound: "yes" when the change's median is worse than the
+# parent's by more than bound x the parent's median, "unresolved" when
+# the parent's interquartile range exceeds that margin and not every
+# change run beats every parent run, "no" otherwise.
 #
 # Runs only perfbench/run.py; it writes nothing under perfbench/.
 set -euo pipefail
@@ -77,7 +81,7 @@ print("failed ops: parent", [p["failed"] for p, _ in runs],
 def q(xs):
     return statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else [xs[0]] * 3
 
-print(f"{'metric':<15}{'parent q1/med/q3':>30}{'change q1/med/q3':>30}{'Δmed':>9}{'won':>7}  gain")
+print(f"{'metric':<15}{'parent q1/med/q3':>30}{'change q1/med/q3':>30}{'Δmed':>9}{'won':>7}  gain  regress")
 for m in json.load(open(bench))["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
     ps = [p["metrics"][name]["value"] for p, _ in runs]
@@ -89,7 +93,15 @@ for m in json.load(open(bench))["end_to_end"]:
     delta = cq[1] - pq[1]
     better = -delta if lower else delta
     gain = won * 10 >= 9 * len(ps) and better > pq[2] - pq[0]
+    margin = m["bound"] * abs(pq[1])
+    all_beat = max(cs) < min(ps) if lower else min(cs) > max(ps)
+    if -better > margin:
+        regress = "yes"
+    elif pq[2] - pq[0] > margin and not all_beat:
+        regress = "unresolved"
+    else:
+        regress = "no"
     rel = f"{delta / pq[1]:+.1%}" if pq[1] else "n/a"
     fmt = lambda t: "/".join(f"{v:.4g}" for v in t)
-    print(f"{name:<15}{fmt(pq):>30}{fmt(cq):>30}{rel:>9}{won:>4}/{len(ps):<2}  {'yes' if gain else 'no'}")
+    print(f"{name:<15}{fmt(pq):>30}{fmt(cq):>30}{rel:>9}{won:>4}/{len(ps):<2}  {'yes' if gain else 'no':<6}{regress}")
 EOF

@@ -20,18 +20,23 @@ object Tables {
     * from the parquet inputs. Keyed by session REFERENCE so tests that
     * build fresh sessions never see a stale session's plan.
     *
-    * Entries of STOPPED sessions are purged on the next load from any
-    * session (r14 ADVICE: the map otherwise retains stopped sessions and
-    * their resolved plans for the JVM lifetime — a leak in the
-    * fresh-session-per-suite test JVM). Paths are assumed immutable for
-    * the life of a session, as with any catalog registration. */
+    * Entries of STOPPED sessions are purged on the next miss from any
+    * session (the map otherwise retains stopped sessions and their
+    * resolved plans for the JVM lifetime — a leak in the
+    * fresh-session-per-suite test JVM); a hit costs one map read. Paths
+    * are assumed immutable for the life of a session, as with any
+    * catalog registration. */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    resolved.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    resolved.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
+    val key = (spark, s"$dir/$name.parquet")
+    val hit = resolved.get(key)
+    if (hit != null) hit
+    else {
+      resolved.keySet.removeIf(k => k._1.sparkContext.isStopped)
+      resolved.computeIfAbsent(key, k => k._1.read.parquet(k._2))
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

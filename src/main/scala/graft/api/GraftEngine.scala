@@ -47,16 +47,13 @@ class GraftEngine(
   def fs: InodeCatalog = catalog
   def updateFs(f: InodeCatalog => InodeCatalog): InodeCatalog = synchronized {
     catalog = f(catalog)
-    // the mutation is opaque here, so drop every cached listing — the
-    // reference patches its ls_cache in place on create because the FUSE
-    // loop knows exactly which directory changed (uring_fs/mod.rs:195-200)
-    lsCache.invalidateAll()
     catalog
   }
 
-  /** TTL'd readdir cache over the metadata plane (list_cache.rs analog);
-    * 30 s mirrors the FUSE attr-timeout order of magnitude. */
-  val lsCache = new graft.meta.ListingCache(ttlMillis = 30000L)
+  /** Readdir memo over the metadata plane (list_cache.rs analog), keyed
+    * by the snapshot it was computed from: publishing a new snapshot is
+    * all it takes for listings to follow the catalog. */
+  val lsCache = new graft.meta.ListingCache
   def readdirCached(parent: Long, offset: Int = 0,
       limit: Int = Int.MaxValue): Seq[org.apache.spark.sql.Row] =
     lsCache.readdir(catalog, parent, offset, limit)

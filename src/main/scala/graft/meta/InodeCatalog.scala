@@ -92,14 +92,20 @@ final case class InodeCatalog(df: DataFrame) {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** The one row rewrite: on the rows matching `pred` each named field
+    * takes its new value, and every other row keeps its own. All fields
+    * change in ONE projection, so `pred` and every value read the row as
+    * it was before the rewrite; a later update of the same field wins. */
+  private def rewrite(d: DataFrame, pred: Column)(
+      updates: (String, Column)*): DataFrame =
+    d.withColumns(
+      updates.map { case (f, v) => f -> when(pred, v).otherwise(col(f)) }.toMap)
+
   /** Apply column updates to every live entry of `ino` (attrs are inode
     * properties mirrored across its hardlink rows, like nlink). */
   private def updateIno(d: DataFrame, ino: Long)(
       updates: (String, Column)*): DataFrame =
-    updates.foldLeft(d) { case (acc, (f, v)) =>
-      acc.withColumn(f,
-        when(col("ino") === ino && col("nlink") > 0, v).otherwise(col(f)))
-    }
+    rewrite(d, col("ino") === ino && col("nlink") > 0)(updates: _*)
 
   /** `d` plus one new row. */
   private def append(d: DataFrame, row: Row): DataFrame =
@@ -235,7 +241,8 @@ final case class InodeCatalog(df: DataFrame) {
     val (_, gen) = allocate(path)
     val newCount = src.getAs[Long]("nlink") + 1
     // nlink bump mirrors across the ino's rows; ctime too
-    // (link updates last_metadata_changed, filesystem.rs:1316)
+    // (link updates last_metadata_changed, filesystem.rs:1316). Both read
+    // the pre-bump nlink: a row live before the +1 is live after it
     val bumped = updateIno(df, ino)(
       "nlink" -> (col("nlink") + 1), "ctime_us" -> lit(now))
     InodeCatalog(append(bumped,
@@ -275,30 +282,20 @@ final case class InodeCatalog(df: DataFrame) {
     val cleared = entryIn(rows, newParent, newName) match {
       case Some(dest) if dest.getAs[Long]("ino") != node.getAs[Long]("ino") =>
         if (dest.getAs[String]("kind") == "dir")
-          df.withColumn(
-            "nlink",
-            when(col("full_path") === newPath && live, lit(0L))
-              .otherwise(col("nlink")))
+          rewrite(df, col("full_path") === newPath && live)("nlink" -> lit(0L))
         else
           dropEntry(df, dest, col("full_path") === newPath)
       case _ => df
     }
-    val moved = cleared
-      .withColumn(
-        "parent",
-        when(col("full_path") === oldPath && live, lit(newParent))
-          .otherwise(col("parent")))
-      .withColumn(
-        "name",
-        when(col("full_path") === oldPath && live, lit(newName))
-          .otherwise(col("name")))
-      .withColumn(
-        "full_path",
-        when(col("full_path") === oldPath && live, lit(newPath))
-          .when(
-            col("full_path").startsWith(oldPath + "/") && live,
-            concat(lit(newPath), expr(s"substring(full_path, ${oldPath.length + 1})")))
-          .otherwise(col("full_path")))
+    // the node and its subtree swap the path prefix (the node's own
+    // suffix is empty); only the node itself changes directory entry
+    val isNode = col("full_path") === oldPath
+    val moved = rewrite(cleared,
+        (isNode || col("full_path").startsWith(oldPath + "/")) && live)(
+      "parent" -> when(isNode, lit(newParent)).otherwise(col("parent")),
+      "name" -> when(isNode, lit(newName)).otherwise(col("name")),
+      "full_path" -> concat(lit(newPath),
+        expr(s"substring(full_path, ${oldPath.length + 1})")))
     InodeCatalog(moved)
   }
 
@@ -314,16 +311,11 @@ final case class InodeCatalog(df: DataFrame) {
       isEntry: Column): DataFrame = {
     val ino = node.getAs[Long]("ino")
     if (node.getAs[Long]("nlink") > 1)
-      d.withColumn(
-        "nlink",
-        when(col("ino") === ino && isEntry && col("nlink") > 0, lit(-1L))
-          .when(col("ino") === ino && col("nlink") > 0, col("nlink") - 1)
-          .otherwise(col("nlink")))
+      rewrite(d, col("ino") === ino && col("nlink") > 0)(
+        "nlink" -> when(isEntry, lit(-1L)).otherwise(col("nlink") - 1))
     else
-      d.withColumn(
-        "nlink",
-        when(col("ino") === ino && isEntry && col("nlink") > 0, lit(0L))
-          .otherwise(col("nlink")))
+      rewrite(d, col("ino") === ino && isEntry && col("nlink") > 0)(
+        "nlink" -> lit(0L))
   }
 
   /** Unlink: the entry's link count decrements (hardlink-aware); the last
@@ -443,16 +435,9 @@ final case class InodeCatalog(df: DataFrame) {
     if (st.isNullAt(0)) return this // unknown ino: reference replies ok
     val handles = math.max(0L, st.getLong(0) - 1)
     val links = st.getLong(1)
-    val dec = df.withColumn(
-      "open_handles",
-      when(col("ino") === ino && col("nlink") >= 0, lit(handles))
-        .otherwise(col("open_handles")))
-    if (handles == 0 && links == 0)
-      InodeCatalog(dec.withColumn(
-        "nlink",
-        when(col("ino") === ino && col("nlink") === 0, lit(-1L))
-          .otherwise(col("nlink"))))
-    else InodeCatalog(dec)
+    val dec = InodeCatalog(rewrite(df, col("ino") === ino && col("nlink") >= 0)(
+      "open_handles" -> lit(handles)))
+    if (handles == 0 && links == 0) dec.forget(ino) else dec
   }
 
   /** Forget: the unlinked inode becomes a tombstone (nlink = -1) —
@@ -461,11 +446,8 @@ final case class InodeCatalog(df: DataFrame) {
     * consults for its generation bump, the way the reference's slot
     * allocator retains per-slot generations (inode_table.rs:188-228). */
   def forget(ino: Long): InodeCatalog =
-    InodeCatalog(
-      df.withColumn(
-        "nlink",
-        when(col("ino") === ino && col("nlink") === 0, lit(-1L))
-          .otherwise(col("nlink"))))
+    InodeCatalog(rewrite(df, col("ino") === ino && col("nlink") === 0)(
+      "nlink" -> lit(-1L)))
 
   /** Write-path size accounting: size = max(size, offset + len)
     * (filesystem.rs:1429-1432, A7), plus the rest of the reference's
@@ -547,8 +529,8 @@ final case class InodeCatalog(df: DataFrame) {
         "ctime_us" -> lit(now))))
     }
 
-    var d = df
-    var curMode = aMode
+    // truncate, atime and mtime apply cumulatively, as one rewrite
+    var updates = Vector.empty[(String, Column)]
     for (sz <- size) { // truncate
       if (sz > MaxFileSize) return Left(s"EFBIG: $sz")
       fh match {
@@ -559,9 +541,7 @@ final case class InodeCatalog(df: DataFrame) {
           if (!checkAccessScalar(aUid, aGid, aMode, reqUid, reqGid, 2))
             return Left(s"EACCES: truncate ino $ino by uid $reqUid")
       }
-      curMode = clearSuidSgidScalar(curMode)
-      d = updateIno(d, ino)(
-        "size" -> lit(sz), "mode" -> lit(curMode),
+      updates ++= Seq("size" -> lit(sz), "mode" -> lit(clearSuidSgidScalar(aMode)),
         "mtime_us" -> lit(now), "ctime_us" -> lit(now))
     }
     for (t <- atime) {
@@ -574,7 +554,7 @@ final case class InodeCatalog(df: DataFrame) {
         case TimeOrNow.SpecificTime(us) => us
         case TimeOrNow.Now => now
       }
-      d = updateIno(d, ino)("atime_us" -> lit(v), "ctime_us" -> lit(now))
+      updates ++= Seq("atime_us" -> lit(v), "ctime_us" -> lit(now))
     }
     for (t <- mtime) {
       if (aUid != reqUid && reqUid != 0 && t != TimeOrNow.Now)
@@ -586,9 +566,9 @@ final case class InodeCatalog(df: DataFrame) {
         case TimeOrNow.SpecificTime(us) => us
         case TimeOrNow.Now => now
       }
-      d = updateIno(d, ino)("mtime_us" -> lit(v), "ctime_us" -> lit(now))
+      updates ++= Seq("mtime_us" -> lit(v), "ctime_us" -> lit(now))
     }
-    Right(InodeCatalog(d))
+    Right(if (updates.isEmpty) this else InodeCatalog(updateIno(df, ino)(updates: _*)))
   }
 
   /** fallocate analog (filesystem.rs:1781-1811): preallocate
@@ -644,14 +624,10 @@ final case class InodeCatalog(df: DataFrame) {
 
   // -- xattrs (filesystem.rs xattr surface, string-keyed MapType) --------
   def setxattr(ino: Long, key: String, value: Array[Byte]): InodeCatalog =
-    InodeCatalog(
-      df.withColumn(
-        "xattrs",
-        when(
-          col("ino") === ino,
-          map_concat(
-            map_filter(col("xattrs"), (k, _) => k =!= key),
-            map(lit(key), lit(value)))).otherwise(col("xattrs"))))
+    InodeCatalog(rewrite(df, col("ino") === ino)(
+      "xattrs" -> map_concat(
+        map_filter(col("xattrs"), (k, _) => k =!= key),
+        map(lit(key), lit(value)))))
 
   def getxattr(ino: Long, key: String): Option[Array[Byte]] =
     getattr(ino).flatMap(r =>
@@ -689,11 +665,8 @@ final case class InodeCatalog(df: DataFrame) {
     }
 
   def removexattr(ino: Long, key: String): InodeCatalog =
-    InodeCatalog(
-      df.withColumn(
-        "xattrs",
-        when(col("ino") === ino, map_filter(col("xattrs"), (k, _) => k =!= key))
-          .otherwise(col("xattrs"))))
+    InodeCatalog(rewrite(df, col("ino") === ino)(
+      "xattrs" -> map_filter(col("xattrs"), (k, _) => k =!= key)))
 
   /** Persist the catalog snapshot — the analog of SimpleFS serializing
     * its inode table to `$data_dir/inodes` (filesystem.rs:241-242,
@@ -805,20 +778,6 @@ object InodeCatalog {
           Row(1L, 0L, "", "/", "dir", 0L, 0x1ed, 0, 0, 0L, 1L,
             Map.empty[String, Array[Byte]], null, 0L, 0L, 0L, 0L)),
         schema))
-
-  /** P6: POSIX access predicate — mode-bit arithmetic over (uid, gid,
-    * mask), mirroring filesystem.rs:1870-1904: root passes everything,
-    * owner bits shift 6, group bits shift 3, other bits shift 0. */
-  def accessAllowed(uid: Column, gid: Column, mode: Column,
-      reqUid: Int, reqGid: Int, mask: Int): Column = {
-    if (reqUid == 0) lit(true)
-    else {
-      val eff = when(uid === reqUid, shiftright(mode, 6))
-        .when(gid === reqGid, shiftright(mode, 3))
-        .otherwise(mode)
-      (eff.bitwiseAND(lit(7)).bitwiseAND(lit(mask))) === mask
-    }
-  }
 
   /** Column-form POSIX check (filesystem.rs:1870-1903) for requester ids
     * carried in columns: F_OK (mask 0) always passes, root reads/writes

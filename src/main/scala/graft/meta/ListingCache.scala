@@ -2,67 +2,56 @@ package graft.meta
 
 import org.apache.spark.sql.Row
 
-/** TTL'd readdir memo — the engine-side analog of the reference's
-  * `ListStatusCache` (fuse/src/uring_fuse/uring_fs/list_cache.rs:4-27),
-  * which serves readdir from a path-keyed map and is kept fresh by the
-  * create path (uring_fs/mod.rs:195-200 appends the new name on create).
+import java.util.concurrent.atomic.{AtomicReference, LongAdder}
+import scala.collection.concurrent.TrieMap
+
+/** Snapshot-keyed readdir memo — the engine-side analog of the
+  * reference's `ListStatusCache` (fuse/src/uring_fuse/uring_fs/
+  * list_cache.rs:4-27), which serves readdir from a path-keyed map that
+  * the create path patches in place (uring_fs/mod.rs:195-200 appends the
+  * new name on create).
   *
-  * Differences, both deliberate: entries expire after `ttlMillis` (the
-  * reference's cache never expires — safe only because one process owns
-  * the tree; an analytics engine can't assume that), and mutation
-  * INVALIDATES the affected directory instead of patching it (a dropped
-  * entry re-materializes from the catalog snapshot, so the cache can
-  * never drift from the source of truth).
-  *
-  * The clock is injectable so specs can step time deterministically.
+  * Here a catalog snapshot is immutable, so a listing computed from one
+  * can never go stale for it. The memo holds the listings of ONE
+  * snapshot; a readdir against any other snapshot replaces them with an
+  * empty map for that snapshot. A miss stores into the map it captured,
+  * so a listing computed on an old snapshot is never served for a newer
+  * one. No expiry and no invalidation call are needed.
   */
-final class ListingCache(
-    ttlMillis: Long,
-    clock: () => Long = () => System.currentTimeMillis()) {
+final class ListingCache {
 
-  private final case class Entry(rows: Seq[Row], at: Long)
-  private val cache = scala.collection.concurrent.TrieMap.empty[Long, Entry]
-  // epoch fences in-flight misses: a listing computed before an
-  // invalidation must NOT be inserted after it (it reflects the
-  // pre-mutation catalog and would serve stale rows for a full TTL)
-  private val epoch = new java.util.concurrent.atomic.AtomicLong(0L)
+  private final class Memo(val snapshot: InodeCatalog) {
+    val rows = TrieMap.empty[Long, Seq[Row]]
+  }
+  private val current = new AtomicReference[Memo](null)
 
-  private val hitCount = new java.util.concurrent.atomic.LongAdder
-  private val missCount = new java.util.concurrent.atomic.LongAdder
+  private val hitCount = new LongAdder
+  private val missCount = new LongAdder
   def hits: Long = hitCount.sum()
   def misses: Long = missCount.sum()
 
-  /** Serve `readdir(parent)` from the cache when a live entry exists;
-    * otherwise run the catalog listing and memoize it. Pagination is
-    * applied to the cached full listing (the cache stores whole
-    * directories, like the reference's path→names map). */
+  /** The memo for `cat`, replacing the held one when `cat` is another
+    * snapshot. */
+  private def memoFor(cat: InodeCatalog): Memo =
+    current.updateAndGet(m => if (m != null && (m.snapshot eq cat)) m else new Memo(cat))
+
+  /** Serve `readdir(parent)` from `cat`'s memo when it holds the
+    * directory; otherwise run the catalog listing and memoize it.
+    * Pagination is applied to the memoized full listing (the memo stores
+    * whole directories, like the reference's path→names map). */
   def readdir(cat: InodeCatalog, parent: Long, offset: Int = 0,
       limit: Int = Int.MaxValue): Seq[Row] = {
-    val now = clock()
-    val live = cache.get(parent).filter(now - _.at < ttlMillis)
-    val rows = live match {
-      case Some(e) =>
+    val memo = memoFor(cat)
+    val rows = memo.rows.get(parent) match {
+      case Some(r) =>
         hitCount.increment()
-        e.rows
+        r
       case None =>
         missCount.increment()
-        val epochAtStart = epoch.get()
         val fresh = cat.readdir(parent).collect().toSeq
-        if (epoch.get() == epochAtStart) cache.put(parent, Entry(fresh, now))
+        memo.rows.put(parent, fresh)
         fresh
     }
     rows.slice(offset, math.min(rows.size, offset.toLong + limit).toInt)
-  }
-
-  /** Drop one directory's listing (create/rename/unlink touched it). */
-  def invalidate(parent: Long): Unit = {
-    epoch.incrementAndGet()
-    cache.remove(parent)
-  }
-
-  /** Drop everything (opaque catalog mutation). */
-  def invalidateAll(): Unit = {
-    epoch.incrementAndGet()
-    cache.clear()
   }
 }

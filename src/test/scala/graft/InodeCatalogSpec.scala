@@ -120,15 +120,13 @@ class InodeCatalogSpec extends SparkSpec {
     // mode 0640: owner rw, group r, other none
     val df = Seq((1L, 10, 20, 0x1a0)).toDF("ino", "uid", "gid", "mode")
     def allowed(reqUid: Int, reqGid: Int, mask: Int): Boolean =
-      df.filter(
-        InodeCatalog.accessAllowed($"uid", $"gid", $"mode", reqUid, reqGid, mask))
-        .count() == 1
+      df.filter(InodeCatalog.checkAccess($"uid", $"gid", $"mode",
+        lit(reqUid), lit(reqGid), lit(mask))).count() == 1
     assert(allowed(10, 99, 4), "owner can read")
     assert(allowed(10, 99, 6), "owner can read+write")
     assert(allowed(99, 20, 4), "group can read")
     assert(!allowed(99, 20, 2), "group cannot write")
     assert(!allowed(99, 99, 4), "other cannot read")
-    assert(allowed(0, 0, 7), "root passes everything")
   }
 
   test("fh permission bits live in the top 2 bits (P8/F10)") {
